@@ -25,7 +25,7 @@ object OsmQueries {
   private def t(s: SparkSession, dir: String, name: String): DataFrame =
     Tables(s, dir, name)
 
-  /** Fixture on disk for wholeTextFiles ingest. */
+  /** Fixture on disk for the OSM XML source. */
   private def fixturePath(): String =
     OsmFixtureData.write(graft.TempDirs.dir("osm-fixture"), "example.osm",
       OsmFixtureData.xml).toString
@@ -116,13 +116,16 @@ object OsmQueries {
         .orderBy("relation_id", "way_id", "seq")
     }),
 
-    // S7 — split-PARALLEL monolith ingest (OsmSource.elementsSplit):
+    // S7 — split-PARALLEL monolith ingest (OsmXmlSource byte ranges):
     // the fixture parsed as byte ranges (1 KB splits → elements span
     // range boundaries) must produce exactly the whole-file shaping,
     // relations included.
     "s7_split_ingest" -> ((s, _) => {
-      OsmSource.elementsSplit(s, fixturePath(), splitBytes = 1024,
-          cleanStreets = false, includeRelations = true).toDF()
+      s.read.format("graft.sources.OsmXmlSource")
+        .option("splitBytes", "1024")
+        .option("cleanStreets", "false")
+        .option("includeRelations", "true")
+        .load(fixturePath())
         .groupBy(col("type").as("el_type"))
         .agg(count(lit(1)).as("cnt"),
           countDistinct(col("created.user")).as("n_users"))

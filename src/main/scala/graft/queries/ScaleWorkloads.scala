@@ -1679,9 +1679,10 @@ object ScaleWorkloads {
     // OSM fixture ×200 into one monolithic file once, then parse it
     // byte-range-parallel.
     "sx9_monolith_ingest" -> ((s, _) => {
-      val path = ScaleWorkloads.monolithPath()
-      graft.sources.OsmSource.elementsSplit(s, path, splitBytes = 256 * 1024,
-          cleanStreets = true, includeRelations = true)
+      s.read.format("graft.sources.OsmXmlSource")
+        .option("splitBytes", (256 * 1024).toString)
+        .option("includeRelations", "true")
+        .load(ScaleWorkloads.monolithPath())
         .groupBy("type").count().orderBy("type")
     }),
 

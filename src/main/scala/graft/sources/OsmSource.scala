@@ -5,6 +5,7 @@ import java.sql.Timestamp
 import java.time.Instant
 import javax.xml.stream.{XMLInputFactory, XMLStreamConstants, XMLStreamReader}
 
+import org.apache.hadoop.conf.Configuration
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -13,15 +14,14 @@ import org.apache.spark.sql.functions._
   * re-expressed as a Spark source producing a typed
   * `Dataset[OsmElement]` with the fixed schema of SURVEY.md §1.4.
   *
-  * Execution shape: files parallelize across the cluster
-  * (`wholeTextFiles`); within a file, StAX pulls events incrementally —
-  * the same constant-memory discipline as the reference's iterparse,
-  * but N files wide. At the 100 TB design point OSM data arrives as
-  * many sharded extracts (or PBF, whose decoder would slot into the
-  * same per-file flatMap), so per-file parallelism is the natural
-  * split; a single monolithic planet.xml should be sharded on ingest —
-  * that split is a one-time framing pass, not something to redo per
-  * query. Everything downstream of this source is columnar parquet.
+  * Execution shape: one ingest path, the DataSourceV2 reader
+  * [[OsmXmlSource]]. The driver lists the input files and cuts each
+  * into byte ranges (metadata only); each task aligns its range to
+  * element boundaries ([[parseRange]]) and StAX-pulls the elements
+  * whose start byte it owns — the reference's single iterparse pass,
+  * range-parallel, so one monolithic planet.xml and many sharded
+  * extracts parallelize alike with no landing rewrite. Everything
+  * downstream of this source is columnar parquet.
   *
   * Shaping semantics mirror `shape_element`
   * (ProjectCodeUsed/data.py:120-185):
@@ -84,7 +84,8 @@ object OsmSource {
       .orderBy("xml_tag")
   }
 
-  /** S1 — parse OSM XML file(s) into the canonical typed Dataset.
+  /** S1 — parse OSM XML file(s) into the canonical typed Dataset,
+    * read through [[OsmXmlSource]] at its default split size.
     * @param cleanStreets apply street normalization at ingest (the
     *        ProjectCodeUsed behavior); pass false for the raw
     *        Lesson6Quizes shaping.
@@ -98,9 +99,11 @@ object OsmSource {
                cleanStreets: Boolean = true,
                includeRelations: Boolean = false): Dataset[OsmElement] = {
     import spark.implicits._
-    spark.sparkContext.wholeTextFiles(path)
-      .flatMap { case (_, xml) => parseElements(xml, cleanStreets, includeRelations) }
-      .toDS()
+    spark.read.format(classOf[OsmXmlSource].getName)
+      .option("cleanStreets", cleanStreets.toString)
+      .option("includeRelations", includeRelations.toString)
+      .load(path)
+      .as[OsmElement]
   }
 
   /** S3 — JSON-lines sink (process_map's `file_in + ".json"` output,
@@ -132,68 +135,10 @@ object OsmSource {
   def writeParquet(ds: Dataset[OsmElement], path: String): Unit =
     ds.write.mode("overwrite").partitionBy("type").parquet(path)
 
-  /** Split-PARALLEL ingest of a monolithic OSM XML file — the
-    * scale-path alternative to [[shardXml]]'s driver-side framing pass:
-    * the file is divided into byte ranges driver-side (metadata only);
-    * each task opens the file through the Hadoop FileSystem API, seeks
-    * to its range, aligns forward to the first top-level element START
-    * inside the range, and parses until the first top-level start
-    * at/after the range end. Every element is parsed exactly once — by
-    * the split containing its start byte — so a single planet.xml
-    * parallelizes cluster-wide on first touch, no landing rewrite.
-    *
-    * Alignment is a byte-level scan for `<node` / `<way` / `<relation`
-    * followed by a delimiter: in well-formed XML a raw '<' cannot
-    * appear inside attribute values (it must be escaped as &lt;), and
-    * OSM's nested children are only nd/tag/member, so the name match
-    * alone identifies top level. (Caveat, documented not defended: an
-    * XML comment containing literal "<node " would confuse the
-    * aligner; OSM planet dumps contain no comments.)
-    */
-  def elementsSplit(spark: SparkSession, path: String,
-                    splitBytes: Long = 64L * 1024 * 1024,
-                    cleanStreets: Boolean = true,
-                    includeRelations: Boolean = false): Dataset[OsmElement] = {
-    import spark.implicits._
-    import org.apache.hadoop.fs.{FileSystem, Path => HPath}
-    // each task buffers its range in memory, so splits are capped well
-    // under Int.MaxValue (a >2 GiB range would also be a terrible task
-    // granularity) — the (end-start).toInt below is then exact
-    require(splitBytes > 0 && splitBytes <= MaxSplitBytes,
-      s"splitBytes must be in (0, $MaxSplitBytes]")
-    // Path(path).getFileSystem, not FileSystem.get(new URI(path)):
-    // raw path strings with spaces/special chars are valid Hadoop
-    // paths but malformed URIs (URISyntaxException)
-    val hPath = new HPath(path)
-    val len = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      .getFileStatus(hPath).getLen
-    val starts = 0L until len by splitBytes
-    val ranges = starts.map(s => (s, math.min(s + splitBytes, len))).toSeq
-    // ship the session's Hadoop settings (credentials, fs impls) to the
-    // executor-side file opens — a bare `new Configuration()` there
-    // would drop every spark.hadoop.* override
-    val confProps = hadoopConfProps(spark)
-    spark.sparkContext
-      .parallelize(ranges, ranges.size)
-      .flatMap { case (s, e) =>
-        parseRange(path, s, e, cleanStreets, includeRelations, confProps) }
-      .toDS()
-  }
-
+  /** Each task buffers its range in memory, so splits are capped well
+    * under Int.MaxValue (a >2 GiB range would also be a terrible task
+    * granularity); [[parseRange]]'s range length is then an exact Int. */
   private[sources] val MaxSplitBytes: Long = 512L * 1024 * 1024
-
-  private[sources] def hadoopConfProps(spark: SparkSession): Array[(String, String)] = {
-    val it = spark.sparkContext.hadoopConfiguration.iterator()
-    val buf = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
-    while (it.hasNext) { val e = it.next(); buf += e.getKey -> e.getValue }
-    buf.toArray
-  }
-
-  private[sources] def confFromProps(props: Array[(String, String)]): org.apache.hadoop.conf.Configuration = {
-    val conf = new org.apache.hadoop.conf.Configuration()
-    props.foreach { case (k, v) => conf.set(k, v) }
-    conf
-  }
 
   private val topLevelNames = Seq("node", "way", "relation")
 
@@ -215,24 +160,36 @@ object OsmSource {
     }
   }
 
-  /** Executor-side range parse (see [[elementsSplit]]): reads
+  /** Executor-side range parse for [[OsmXmlSource]]: reads
     * [start, end) plus the read-ahead needed to complete the last
     * owned element, returns the shaped elements whose start byte falls
-    * in the range. Tail alignment scans each newly read chunk with a
-    * 16-byte overlap window — no per-chunk copy of the whole buffer. */
+    * in the range — the range aligns forward to its first top-level
+    * element START and parses until the first top-level start at/after
+    * its end, so every element is parsed exactly once, by the range
+    * containing its start byte. Tail alignment scans each newly read
+    * chunk with a 16-byte overlap window — no per-chunk copy of the
+    * whole buffer.
+    *
+    * Alignment is a byte-level scan for `<node` / `<way` / `<relation`
+    * followed by a delimiter: in well-formed XML a raw '<' cannot
+    * appear inside attribute values (it must be escaped as &lt;), and
+    * OSM's nested children are only nd/tag/member, so the name match
+    * alone identifies top level. (Caveat, documented not defended: an
+    * XML comment containing literal "<node " would confuse the
+    * aligner; OSM planet dumps contain no comments.) */
   private[sources] def parseRange(path: String, start: Long, end: Long,
                                   cleanStreets: Boolean,
                                   includeRelations: Boolean,
-                                  confProps: Array[(String, String)] = Array.empty): Iterator[OsmElement] = {
+                                  conf: Configuration): Iterator[OsmElement] = {
     import org.apache.hadoop.fs.{Path => HPath}
     // getFileSystem off the Path itself — java.net.URI(path) throws on
     // paths needing escaping (spaces etc.)
     val hPath = new HPath(path)
-    val fs = hPath.getFileSystem(confFromProps(confProps))
+    val fs = hPath.getFileSystem(conf)
     val in = fs.open(hPath)
     try {
       in.seek(start)
-      val base = math.toIntExact(end - start) // elementsSplit caps splitBytes
+      val base = math.toIntExact(end - start) // ranges cap at MaxSplitBytes
       val bos = new java.io.ByteArrayOutputStream(base + 1024)
       val chunk = new Array[Byte](1 << 20)
       // read the range itself
@@ -294,82 +251,8 @@ object OsmSource {
     } finally in.close()
   }
 
-  /** One-time framing pass for a MONOLITHIC OSM file (planet.xml
-    * arrives as one huge document; `wholeTextFiles` parallelism is
-    * per-file): stream the document with StAX — constant memory, the
-    * reference's iterparse discipline (ProjectCodeUsed/data.py:193) —
-    * and re-emit complete top-level elements into `elementsPerShard`-
-    * sized `<osm>`-wrapped shard files. [[elements]]/[[tagHistogram]]
-    * then fan out over the `part-NNNNN.osm` shard glob with one task
-    * per shard. Run
-    * once at landing time; every downstream pass is parallel.
-    *
-    * @return number of shards written */
-  def shardXml(inPath: String, outDir: String, elementsPerShard: Int): Int = {
-    import java.nio.file.{Files, Path}
-    import javax.xml.stream.XMLOutputFactory
-    val topLevel = Set("node", "way", "relation")
-    val in = new java.io.FileInputStream(inPath)
-    val f = XMLInputFactory.newInstance()
-    f.setProperty(XMLInputFactory.SUPPORT_DTD, false)
-    f.setProperty(XMLInputFactory.IS_SUPPORTING_EXTERNAL_ENTITIES, false)
-    val r = f.createXMLStreamReader(in)
-    val of = XMLOutputFactory.newInstance()
-    Files.createDirectories(Path.of(outDir))
-    var shard = -1
-    var inShard = 0
-    var osw: java.io.Writer = null
-    var w: javax.xml.stream.XMLStreamWriter = null
-    def rotate(): Unit = {
-      if (w != null) { w.writeEndElement(); w.writeEndDocument(); w.close(); osw.close() }
-      shard += 1; inShard = 0
-      osw = Files.newBufferedWriter(Path.of(outDir, f"part-$shard%05d.osm"))
-      w = of.createXMLStreamWriter(osw)
-      w.writeStartDocument(); w.writeStartElement("osm")
-    }
-    try {
-      while (r.hasNext) {
-        if (r.next() == XMLStreamConstants.START_ELEMENT &&
-            topLevel.contains(r.getLocalName)) {
-          // main loop only ever sees TOP-LEVEL starts: copySubtree
-          // consumes each element's entire subtree (children are
-          // nd/tag/member, never node/way/relation)
-          if (w == null || inShard >= elementsPerShard) rotate()
-          copySubtree(r, w)
-          inShard += 1
-        }
-      }
-      if (w != null) { w.writeEndElement(); w.writeEndDocument(); w.close(); osw.close() }
-    } finally { r.close(); in.close() }
-    shard + 1
-  }
-
-  /** Copies the element the reader is positioned on (START_ELEMENT),
-    * subtree included, to the writer; leaves the reader on the matching
-    * END_ELEMENT. OSM elements carry no meaningful text content, so
-    * character events drop. */
-  private def copySubtree(r: XMLStreamReader, w: javax.xml.stream.XMLStreamWriter): Unit = {
-    var depth = 0
-    var done = false
-    while (!done) {
-      r.getEventType match {
-        case XMLStreamConstants.START_ELEMENT =>
-          w.writeStartElement(r.getLocalName)
-          (0 until r.getAttributeCount).foreach(i =>
-            w.writeAttribute(r.getAttributeLocalName(i), r.getAttributeValue(i)))
-          depth += 1
-        case XMLStreamConstants.END_ELEMENT =>
-          w.writeEndElement()
-          depth -= 1
-          if (depth == 0) done = true
-        case _ => // whitespace/comments: drop
-      }
-      if (!done) r.next()
-    }
-  }
-
   // -------------------------------------------------------------------
-  // StAX parsing (executor-side, constant memory per file)
+  // StAX parsing (executor-side, one range in memory at a time)
   // -------------------------------------------------------------------
 
   private def newReader(xml: String): XMLStreamReader = {
@@ -398,8 +281,9 @@ object OsmSource {
 
   /** Incremental pull-parse: yields one shaped OsmElement per
     * `<node>`/`<way>` (and `<relation>` when `includeRelations`);
-    * everything else skips. */
-  private[sources] def parseElements(xml: String, cleanStreets: Boolean,
+    * everything else skips. Over a whole document it is the reference
+    * the range reader is tested against. */
+  private[graft] def parseElements(xml: String, cleanStreets: Boolean,
                                      includeRelations: Boolean = false): Iterator[OsmElement] = {
     val r = newReader(xml)
     new Iterator[OsmElement] {

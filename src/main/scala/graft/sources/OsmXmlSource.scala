@@ -4,7 +4,10 @@ import java.util
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.Encoders
+import com.fasterxml.jackson.databind.ObjectMapper
+import org.apache.hadoop.fs.{FileStatus, Path => HPath}
+import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.sql.{Encoders, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
@@ -12,16 +15,17 @@ import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader,
   PartitionReaderFactory, Scan, ScanBuilder, SupportsPushDownRequiredColumns}
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
+import org.apache.spark.util.SerializableConfiguration
 
-/** DataSourceV2 TableProvider for OSM XML — the idiomatic Spark form of
-  * [[OsmSource.elementsSplit]] (SURVEY §4.3's "optional polish", VERDICT
-  * r3 Missing #4):
+/** DataSourceV2 TableProvider for OSM XML — the one ingest path
+  * ([[OsmSource.elements]] is a typed read of it):
   *
   * {{{
   *   spark.read.format("graft.sources.OsmXmlSource")
-  *     .option("splitBytes", "67108864")     // default 64 MiB
+  *     .option("splitBytes", "67108864")     // default: worked out from the input
   *     .option("cleanStreets", "true")       // street normalization at ingest
   *     .option("includeRelations", "false")  // reference drop rule by default
   *     .load("/data/planet.xml")             // file, directory, or glob
@@ -31,9 +35,12 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * ranges); each InputPartition aligns itself to element boundaries
   * executor-side via [[OsmSource.parseRange]] — a monolithic planet.xml
   * parallelizes across the cluster on first touch, and many files fan
-  * out file×range wide. Schema is the fixed [[OsmSource.OsmElement]]
-  * shape, so everything downstream (including the golden shaping
-  * semantics) is shared with the RDD-based source.
+  * out file×range wide. Without `splitBytes` the range size follows
+  * Spark's file-source rule, `min(spark.sql.files.maxPartitionBytes,
+  * max(spark.sql.files.openCostInBytes, totalBytes /
+  * defaultParallelism))`, so an input a few times the open cost still
+  * spreads over every core, while a small one stays one task. Schema
+  * is the fixed [[OsmSource.OsmElement]] shape.
   *
   * TOP-LEVEL column pruning IS implemented
   * (SupportsPushDownRequiredColumns): XML parse cost is unavoidable —
@@ -59,40 +66,6 @@ class OsmXmlSource extends TableProvider {
 
 object OsmXmlSource {
   val schema: StructType = Encoders.product[OsmSource.OsmElement].schema
-
-  /** Minimal parser for the `paths` option's JSON string array
-    * (`["p1","p2"]`, standard JSON string escapes). */
-  private[sources] def parseJsonStringArray(json: String): Seq[String] = {
-    val out = scala.collection.mutable.ArrayBuffer.empty[String]
-    val sb = new StringBuilder
-    var i = 0
-    var inStr = false
-    while (i < json.length) {
-      val c = json.charAt(i)
-      if (!inStr) {
-        if (c == '"') { inStr = true; sb.clear() }
-      } else c match {
-        case '"' => inStr = false; out += sb.toString
-        case '\\' if i + 1 < json.length =>
-          i += 1
-          json.charAt(i) match {
-            case 'u' if i + 4 < json.length =>
-              sb += Integer.parseInt(json.substring(i + 1, i + 5), 16).toChar
-              i += 4
-            case 'n' => sb += '\n'
-            case 't' => sb += '\t'
-            case 'r' => sb += '\r'
-            case 'b' => sb += '\b'
-            case 'f' => sb += '\f'
-            case other => sb += other // covers \" \\ \/
-          }
-        case other => sb += other
-      }
-      i += 1
-    }
-    require(out.nonEmpty, s"osmxml: no paths in $json")
-    out.toSeq
-  }
 
   private[sources] def encoder: ExpressionEncoder[OsmSource.OsmElement] =
     ExpressionEncoder(Encoders.product[OsmSource.OsmElement]
@@ -121,12 +94,13 @@ private[sources] class OsmScanBuilder(options: CaseInsensitiveStringMap)
     * JSON-encoded string array. */
   private val paths: Seq[String] =
     Option(options.get("path")).map(Seq(_))
-      .orElse(Option(options.get("paths")).map(OsmXmlSource.parseJsonStringArray))
+      .orElse(Option(options.get("paths")).map(json =>
+        new ObjectMapper().readValue(json, classOf[Array[String]]).toSeq))
+      .filter(_.nonEmpty)
       .getOrElse(throw new IllegalArgumentException("osmxml: path is required"))
-  private val splitBytes = Option(options.get("splitBytes")).map(_.toLong)
-    .getOrElse(64L * 1024 * 1024)
-  require(splitBytes > 0 && splitBytes <= OsmSource.MaxSplitBytes,
-    s"osmxml: splitBytes must be in (0, ${OsmSource.MaxSplitBytes}]")
+  private val splitBytesOption = Option(options.get("splitBytes")).map(_.toLong)
+  splitBytesOption.foreach(b => require(b > 0 && b <= OsmSource.MaxSplitBytes,
+    s"osmxml: splitBytes must be in (0, ${OsmSource.MaxSplitBytes}]"))
   private val cleanStreets = Option(options.get("cleanStreets")).forall(_.toBoolean)
   private val includeRelations = Option(options.get("includeRelations")).exists(_.toBoolean)
 
@@ -147,47 +121,62 @@ private[sources] class OsmScanBuilder(options: CaseInsensitiveStringMap)
     s"osmxml paths=${paths.mkString(",")} splitBytes=$splitBytes " +
       s"ReadSchema: ${requiredFields.mkString("[", ",", "]")}"
 
-  override def planInputPartitions(): Array[InputPartition] = {
-    import org.apache.hadoop.fs.{FileSystem, Path => HPath}
-    // driver-side planning uses the active session's Hadoop conf; the
-    // same props ship to executors inside each partition
-    val spark = org.apache.spark.sql.SparkSession.active
-    val confProps = OsmSource.hadoopConfProps(spark)
+  private def spark = SparkSession.active
+
+  /** The input files, listed once per scan on the driver. */
+  private lazy val files: Array[FileStatus] = {
     val conf = spark.sparkContext.hadoopConfiguration
     paths.toArray.flatMap { path =>
       // getFileSystem off the Path — java.net.URI(path) throws on
       // paths needing escaping (spaces etc.)
       val hPath = new HPath(path)
       val fs = hPath.getFileSystem(conf)
-      val statuses = fs.globStatus(hPath) match {
+      fs.globStatus(hPath) match {
         case null | Array() =>
           throw new java.io.FileNotFoundException(s"osmxml: path does not exist: $path")
         case arr => arr.flatMap { st =>
           if (st.isDirectory) fs.listStatus(st.getPath).filter(_.isFile) else Array(st)
         }
       }
-      statuses.flatMap { st =>
-        val len = st.getLen
-        (0L until len by splitBytes).map { s =>
-          OsmRangePartition(st.getPath.toString, s, math.min(s + splitBytes, len),
-            cleanStreets, includeRelations, confProps): InputPartition
-        }
-      }
     }
   }
 
-  override def createReaderFactory(): PartitionReaderFactory =
-    new OsmReaderFactory(
-      requiredFields.map(OsmXmlSource.schema.fieldIndex))
+  private lazy val splitBytes: Long = splitBytesOption.getOrElse {
+    val sql = SQLConf.get
+    // rounded up, so a file of totalBytes splits into exactly
+    // defaultParallelism ranges rather than gaining a few-byte sliver
+    val cores = spark.sparkContext.defaultParallelism
+    val perCore = (files.map(_.getLen).sum + cores - 1) / cores
+    val rule = math.min(sql.filesMaxPartitionBytes, math.max(sql.filesOpenCostInBytes, perCore))
+    math.max(1L, math.min(rule, OsmSource.MaxSplitBytes))
+  }
+
+  override def planInputPartitions(): Array[InputPartition] =
+    files.flatMap { st =>
+      val len = st.getLen
+      (0L until len by splitBytes).map { s =>
+        OsmRangePartition(st.getPath.toString, s, math.min(s + splitBytes, len)): InputPartition
+      }
+    }
+
+  /** The session's Hadoop settings (credentials, fs impls) reach the
+    * executor-side file opens through one broadcast per scan, as in
+    * Spark's own file scans. */
+  override def createReaderFactory(): PartitionReaderFactory = {
+    val sc = spark.sparkContext
+    new OsmReaderFactory(requiredFields.map(OsmXmlSource.schema.fieldIndex),
+      cleanStreets, includeRelations,
+      sc.broadcast(new SerializableConfiguration(sc.hadoopConfiguration)))
+  }
 }
 
-private[sources] case class OsmRangePartition(path: String, start: Long, end: Long,
-                                              cleanStreets: Boolean,
-                                              includeRelations: Boolean,
-                                              confProps: Array[(String, String)])
+private[sources] case class OsmRangePartition(path: String, start: Long, end: Long)
     extends InputPartition
 
-private[sources] class OsmReaderFactory(requiredIndices: Array[Int])
+private[sources] class OsmReaderFactory(requiredIndices: Array[Int],
+                                        cleanStreets: Boolean,
+                                        includeRelations: Boolean,
+                                        conf: Broadcast[SerializableConfiguration])
     extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
     val p = partition.asInstanceOf[OsmRangePartition]
@@ -195,7 +184,7 @@ private[sources] class OsmReaderFactory(requiredIndices: Array[Int])
     val pruneAll = requiredIndices.length == full.length
     new PartitionReader[InternalRow] {
       private val iter = OsmSource.parseRange(p.path, p.start, p.end,
-        p.cleanStreets, p.includeRelations, p.confProps)
+        cleanStreets, includeRelations, conf.value.value)
       private val toRow = OsmXmlSource.encoder.createSerializer()
       private var current: InternalRow = _
       override def next(): Boolean = {

@@ -88,21 +88,6 @@ class OsmSourceSpec extends SparkSpec {
     way.address.street shouldBe "West Lexington Street"
   }
 
-  test("shardXml: monolithic file → parallel shards, ingest-identical") {
-    val p = OsmFixture.write("example.osm", OsmFixture.xml)
-    val shardDir = java.nio.file.Files.createTempDirectory("osm-shards").toString
-    val n = OsmSource.shardXml(p.toString, shardDir, elementsPerShard = 5)
-    // 20 nodes + 1 way + 1 relation = 22 top-level elements → 5 shards of ≤5
-    n shouldBe 5
-    val whole = OsmSource.elements(spark, p.toString, cleanStreets = false)
-      .collect().map(e => (e.id, e.`type`, e.node_refs)).toSet
-    val sharded = OsmSource.elements(spark, s"$shardDir/*.osm", cleanStreets = false)
-      .collect().map(e => (e.id, e.`type`, e.node_refs)).toSet
-    sharded shouldBe whole
-    // each shard parses independently (one task per shard downstream)
-    spark.sparkContext.wholeTextFiles(s"$shardDir/*.osm").count() shouldBe 5
-  }
-
   test("relations parse on opt-in: members in document order; default still drops") {
     val p = OsmFixture.write("example.osm", OsmFixture.xml)
     // default: the reference's drop rule (data.py:173) is preserved
@@ -119,7 +104,8 @@ class OsmSourceSpec extends SparkSpec {
     rel.head.node_refs shouldBe null
   }
 
-  test("elementsSplit: byte-range-parallel monolith ingest equals whole-file parse") {
+  test("DSv2 source: byte-range-parallel monolith ingest equals whole-file parse") {
+    import spark.implicits._
     // a monolith big enough for many splits: the fixture's 20 nodes
     // cloned with unique ids + the way + relation
     val body = new StringBuilder
@@ -140,26 +126,101 @@ class OsmSourceSpec extends SparkSpec {
 </osm>
 """
     val p = OsmFixture.write("monolith.osm", body.toString)
-    val whole = OsmSource.elements(spark, p.toString, cleanStreets = false,
-      includeRelations = true)
-      .collect().map(e => (e.id, e.`type`, e.node_refs, e.name)).sortBy(_._1).toSeq
+    val whole = OsmSource.parseElements(body.toString, cleanStreets = false,
+      includeRelations = true).toSeq.sortBy(_.id)
     // 4 KB splits → ~dozens of ranges, elements spanning boundaries
-    val split = OsmSource.elementsSplit(spark, p.toString, splitBytes = 4096,
-      cleanStreets = false, includeRelations = true)
-      .collect().map(e => (e.id, e.`type`, e.node_refs, e.name)).sortBy(_._1).toSeq
+    val dsv2 = spark.read.format("graft.sources.OsmXmlSource")
+      .option("splitBytes", "4096")
+      .option("cleanStreets", "false")
+      .option("includeRelations", "true")
+      .load(p.toString)
+    dsv2.rdd.getNumPartitions should be > 10
+    val split = dsv2.as[OsmSource.OsmElement].collect().toSeq.sortBy(_.id)
     split.length shouldBe 402
     split shouldBe whole
   }
 
+  test("DSv2 source property: range reads equal the whole-document parse") {
+    import spark.implicits._
+    import org.scalacheck.Gen
+    import org.scalacheck.rng.Seed
+    // attribute text: 2-, 3- and 4-byte UTF-8 sequences, so range edges
+    // land inside characters, plus escaped markup the aligner must skip
+    val text = Gen.choose(0, 6).flatMap(n => Gen.listOfN(n,
+      Gen.oneOf("a", "Z", " ", "é", "ß", "√", "日本", "🗺", "&amp;", "&lt;node ", "&quot;")))
+      .map(_.mkString)
+    val tag = for {
+      k <- Gen.oneOf("name", "amenity", "note", "addr:street", "addr:postcode", "addr:street:name")
+      v <- text
+    } yield s"""<tag k="$k" v="$v"/>"""
+    val tags = Gen.choose(0, 4).flatMap(Gen.listOfN(_, tag))
+    val ref = Gen.choose(1L, 99L).map(r => s"""ref="$r"""")
+    // (type, extra attributes, children); ids are assigned in order below
+    val node = for {
+      lat <- Gen.choose(-90.0, 90.0); lon <- Gen.choose(-180.0, 180.0); ts <- tags
+    } yield ("node", s"""lat="$lat" lon="$lon"""", ts)
+    val way = for {
+      nds <- Gen.choose(0, 5).flatMap(Gen.listOfN(_, ref.map(r => s"<nd $r/>"))); ts <- tags
+    } yield ("way", "", nds ++ ts)
+    val relation = for {
+      ms <- Gen.choose(0, 3).flatMap(Gen.listOfN(_, for {
+        t <- Gen.oneOf("node", "way"); r <- ref; role <- text
+      } yield s"""<member type="$t" $r role="$role"/>"""))
+      ts <- tags
+    } yield ("relation", "", ms ++ ts)
+    val doc = for {
+      els <- Gen.choose(0, 30).flatMap(Gen.listOfN(_, Gen.frequency(5 -> node, 2 -> way, 1 -> relation)))
+      users <- Gen.listOfN(els.size, text)
+      seps <- Gen.listOfN(els.size, Gen.oneOf("", " ", "\n ", "\n\n  "))
+    } yield {
+      val body = els.zip(users).zip(seps).zipWithIndex.map { case ((((t, extra, kids), user), sep), i) =>
+        val open = s"""<$t id="${i + 1}" version="1" changeset="7" """ +
+          s"""timestamp="2013-01-01T00:00:00Z" user="$user" uid="3" $extra"""
+        sep + (if (kids.isEmpty) s"$open/>" else kids.mkString(s"$open>\n  ", "\n  ", s"\n</$t>"))
+      }
+      "<?xml version=\"1.0\" encoding=\"UTF-8\"?>\n<osm version=\"0.6\">\n" +
+        """ <bounds minlat="1" minlon="2" maxlat="3" maxlon="4"/>""" + body.mkString + "\n</osm>\n"
+    }
+    val params = for {
+      xml <- doc; anySize <- Gen.choose(64, 4096)
+      onStart <- Gen.oneOf(true, false); pick <- Gen.choose(0, 1000)
+      cleanStreets <- Gen.oneOf(true, false); includeRelations <- Gen.oneOf(true, false)
+    } yield {
+      // half the cases end the first range exactly on an element's start
+      // byte, the boundary a uniform size rarely hits
+      val starts = "<(node|way|relation)[ />]".r.findAllMatchIn(xml)
+        .map(m => xml.substring(0, m.start).getBytes("UTF-8").length)
+        .filter(b => b >= 64 && b <= 4096).toSeq
+      val splitBytes = if (onStart && starts.nonEmpty) starts(pick % starts.size) else anySize
+      (xml, splitBytes, cleanStreets, includeRelations)
+    }
+    // 25 cases keep the spec within seconds
+    for (i <- 0 until 25) {
+      val (xml, splitBytes, cleanStreets, includeRelations) =
+        params(Gen.Parameters.default, Seed(i.toLong)).get
+      val p = OsmFixture.write(s"property/doc-$i.osm", xml)
+      val got = spark.read.format("graft.sources.OsmXmlSource")
+        .option("splitBytes", splitBytes.toString)
+        .option("cleanStreets", cleanStreets.toString)
+        .option("includeRelations", includeRelations.toString)
+        .load(p.toString).as[OsmSource.OsmElement].collect().toSeq
+      val want = OsmSource.parseElements(xml, cleanStreets, includeRelations).toSeq
+      withClue(s"seed $i, splitBytes $splitBytes, ${xml.length} chars: ") {
+        got.sortBy(e => (e.`type`, e.id)) shouldBe want.sortBy(e => (e.`type`, e.id))
+      }
+    }
+  }
+
   test("DSv2 source: format-based read equals the RDD-based parse, ranges parallel") {
+    import spark.implicits._
     val p = OsmFixture.write("example.osm", OsmFixture.xml)
     val dsv2 = spark.read.format("graft.sources.OsmXmlSource")
       .option("includeRelations", "true")
       .option("cleanStreets", "false")
       .option("splitBytes", "1024")
       .load(p.toString)
-    val whole = OsmSource.elements(spark, p.toString, cleanStreets = false,
-      includeRelations = true).toDF()
+    val whole = OsmSource.parseElements(OsmFixture.xml, cleanStreets = false,
+      includeRelations = true).toSeq.toDS().toDF()
     dsv2.count() shouldBe 22 // 20 nodes + way + relation
     // identical rows (stable projection; timestamps included)
     val proj = Seq("id", "type", "visible", "created.user", "created.timestamp",
@@ -175,14 +236,38 @@ class OsmSourceSpec extends SparkSpec {
     dsv2.rdd.getNumPartitions should be >= 2
   }
 
+  test("DSv2 source: the default split follows Spark's file-source rule") {
+    val p = OsmFixture.write("example.osm", OsmFixture.xml).toString
+    def parts(): Int = OsmSource.elements(spark, p).rdd.getNumPartitions
+    val len = java.nio.file.Files.size(java.nio.file.Path.of(p))
+    val cores = spark.sparkContext.defaultParallelism
+    val keys = Seq("spark.sql.files.openCostInBytes", "spark.sql.files.maxPartitionBytes")
+    val saved = keys.map(k => k -> spark.conf.getOption(k))
+    try {
+      // the 4 MB default open cost keeps a small file in one range
+      parts() shouldBe 1
+      // below the open cost, the file spreads over the session's cores
+      spark.conf.set("spark.sql.files.openCostInBytes", "1")
+      parts() shouldBe cores
+      // and maxPartitionBytes caps the range size
+      spark.conf.set("spark.sql.files.maxPartitionBytes", "128")
+      parts() shouldBe ((len + 127) / 128).toInt
+      parts() should be > cores
+      OsmSource.elements(spark, p).count() shouldBe 21
+    } finally saved.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
   test("split reader and DSv2 source handle paths containing spaces") {
     // raw path strings with spaces are valid Hadoop paths but
-    // malformed java.net.URIs — the sources must route through
+    // malformed java.net.URIs — the source must route through
     // Path.getFileSystem, never FileSystem.get(new URI(path))
     val p = OsmFixture.write("dir with spaces/example 2.osm", OsmFixture.xml)
-    OsmSource.elementsSplit(spark, p.toString, splitBytes = 1024)
-      .count() shouldBe 21
+    OsmSource.elements(spark, p.toString).count() shouldBe 21
     spark.read.format("graft.sources.OsmXmlSource")
+      .option("splitBytes", "1024")
       .load(p.toString).count() shouldBe 21
   }
 
@@ -213,6 +298,10 @@ class OsmSourceSpec extends SparkSpec {
     val both = spark.read.format("graft.sources.OsmXmlSource")
       .load(p1.toString, p2.toString)
     both.count() shouldBe 23 // 21 (ex-relation) + 2 tags-fixture nodes
+    // a glob fans out over every file it matches
+    val dir = OsmFixture.write("multi/example.osm", OsmFixture.xml).getParent
+    OsmFixture.write("multi/tags.osm", OsmFixture.tagsXml)
+    OsmSource.elements(spark, s"$dir/*.osm").count() shouldBe 23
     val err = intercept[java.io.FileNotFoundException] {
       spark.read.format("graft.sources.OsmXmlSource")
         .load("/tmp/does-not-exist-osm.xml").count()

@@ -115,10 +115,11 @@ class PlanAuditSpec extends SparkSpec {
     }
   }
 
-  test("elementsSplit parallelizes a monolith: one task per byte range") {
+  test("OsmXmlSource parallelizes a monolith: one task per byte range") {
     val p = graft.queries.ScaleWorkloads.monolithPath()
-    val ds = graft.sources.OsmSource.elementsSplit(spark, p, splitBytes = 64 * 1024)
-    ds.rdd.getNumPartitions should be >= 8 // ~2 MB / 64 KB ranges
+    val df = spark.read.format("graft.sources.OsmXmlSource")
+      .option("splitBytes", (64 * 1024).toString).load(p)
+    df.rdd.getNumPartitions should be >= 8 // ~2 MB / 64 KB ranges
   }
 
   test("s6: the ts range predicate reaches the range-partitioned scan") {
