@@ -7,11 +7,11 @@ import org.apache.spark.util.sketch.CountMinSketch
 /** Persisted per-key COUNT-MIN sketch table — point-FREQUENCY
   * estimates over unbounded history with bounded state, completing the
   * sketch family: HLL answers "how many distinct" ([[SketchTable]]),
-  * KLL "what quantile" ([[QuantileSketch]]), theta "how big is the
-  * overlap" ([[ThetaSketch]]), Misra–Gries "which items are heavy"
-  * ([[FreqItems]]) — count-min answers "how often has THIS item
-  * appeared", for items chosen at query time, long after the raw rows
-  * are gone. (Misra–Gries keeps only the top-k survivors; CMS can be
+  * KLL "what quantile" (Spark's `kll_sketch_agg_*`, a14), theta "how
+  * big is the overlap" (`theta_sketch_agg`, a15), Misra–Gries "which
+  * items are heavy" ([[FreqItems]]) — count-min answers "how often
+  * has THIS item appeared", for items chosen at query time, long after
+  * the raw rows are gone. (Misra–Gries keeps only the top-k survivors; CMS can be
   * asked about ANY item, at the price of a one-sided overestimate.)
   *
   * Same lifecycle as every graft sketch table: one fixed-size sketch
@@ -31,7 +31,7 @@ import org.apache.spark.util.sketch.CountMinSketch
 object CountMinTable {
 
   /** One CMS of `valCol` (as string) per `keyCol` group — the
-    * [[ThetaSketch.sketchRows]] hot-path shape: a mutable sketch per
+    * map-side-combine hot-path shape: a mutable sketch per
     * (key × partition), no per-row serialize; per-partition sketches
     * shuffle (depth×width longs per key per partition, map-side
     * combined by construction) and merge per key. */

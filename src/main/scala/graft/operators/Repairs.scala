@@ -76,13 +76,24 @@ object Repairs {
     df.withColumn("address", col("address").withField("city", fixed))
   }
 
+  /** Whole-word endings equal to an image of [[T.streetMapping]]
+    * ("Arthur St", "Wellesley Avenue", "Street", ...). */
+  private val mappedEnding: String = T.streetMapping.values.toSeq.distinct
+    .map(_.replace(" ", "\\s+")).mkString("(^|\\s)(", "|", ")\\s*$")
+
   /** F4 — street-suffix normalization as a repair pass (update_name,
-    * ProjectCodeUsed/data.py:110-118), for data ingested uncleaned. */
-  def normalizeStreets(df: DataFrame): DataFrame =
+    * ProjectCodeUsed/data.py:110-118), for data ingested uncleaned.
+    * The reference mapping is not idempotent ("Arthur" → "Arthur St" →
+    * "Arthur Street"), so a name that already ends in one of its
+    * images is left alone: ingest-time cleaning followed by this pass
+    * stops where the reference does ("North Arthur St"). */
+  def normalizeStreets(df: DataFrame): DataFrame = {
+    val street = addr("street")
     df.withColumn("address", col("address")
       .withField("street",
-        when(addr("street").isNotNull, T.normalizeStreet(addr("street")))
-          .otherwise(addr("street"))))
+        when(street.isNotNull && !street.rlike(mappedEnding), T.normalizeStreet(street))
+          .otherwise(street)))
+  }
 
   /** The full repair pipeline, reference order. Idempotent: a repaired
     * snapshot passes through unchanged (RepairsSpec pins it). */

@@ -65,10 +65,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     ext.injectFunction(GraftExtensions.gopherStatsDescriptor)
     ext.injectFunction(GraftExtensions.repetitionStatsDescriptor)
     ext.injectFunction(GraftExtensions.nfcDescriptor)
-    ext.injectFunction(GraftExtensions.thetaEstimateDescriptor)
-    ext.injectFunction(GraftExtensions.thetaIntersectDescriptor)
-    ext.injectFunction(GraftExtensions.thetaANotBDescriptor)
-    ext.injectFunction(GraftExtensions.kllQuantileDescriptor)
     ext.injectFunction(GraftExtensions.idHashDescriptor)
     ext.injectFunction(GraftExtensions.bpeEncodeDescriptor)
     ext.injectFunction(GraftExtensions.qualityScoreDescriptor)
@@ -199,54 +195,6 @@ object GraftExtensions {
       RepetitionStatsExpr(args(0), tn, dn)
     })
 
-  /** The persisted sketch tables ([[graft.operators.ThetaSketch]],
-    * [[graft.operators.QuantileSketch]]) hold binary sketch rows that
-    * until now were only readable through the Scala Column surface —
-    * a pure-SQL session (the way an analyst actually meets a shared
-    * sketch table) couldn't estimate from them. These four descriptors
-    * close that gap the same way `graft_nfc`/`graft_pip` do for the
-    * text/geo expressions: one definition of the estimator (the
-    * operator object's scalar functions), two call surfaces. The
-    * scalars run over few-KB sketch rows — sketch-table cardinality,
-    * not data-path cardinality — so the UDF bridge is the right cost
-    * class here (same reasoning as [[QuantileSketch.quantileOf]]).
-    */
-  private def sqlUdf1(name: String, u: org.apache.spark.sql.expressions
-      .UserDefinedFunction): Seq[Expression] => Expression =
-    (args: Seq[Expression]) => {
-      require(args.length == 1, s"usage: $name(sketch)")
-      import org.apache.spark.sql.graftbridge.ColumnBridge._
-      toCatalyst(u(column(args.head)))
-    }
-
-  private def sqlUdf2(name: String, u: org.apache.spark.sql.expressions
-      .UserDefinedFunction): Seq[Expression] => Expression =
-    (args: Seq[Expression]) => {
-      require(args.length == 2, s"usage: $name(sketch_a, sketch_b)")
-      import org.apache.spark.sql.graftbridge.ColumnBridge._
-      toCatalyst(u(column(args(0)), column(args(1))))
-    }
-
-  /** `graft_theta_estimate(sketch)` → double: distinct estimate of one
-    * serialized theta sketch. */
-  val thetaEstimateDescriptor: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("graft_theta_estimate"),
-    new ExpressionInfo(graft.operators.ThetaSketch.getClass.getName, "graft_theta_estimate"),
-    sqlUdf1("graft_theta_estimate", graft.operators.ThetaSketch.estimateUdf))
-
-  /** `graft_theta_intersect(a, b)` → double: distinct estimate of the
-    * intersection — the set question HLL can't answer, from SQL. */
-  val thetaIntersectDescriptor: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("graft_theta_intersect"),
-    new ExpressionInfo(graft.operators.ThetaSketch.getClass.getName, "graft_theta_intersect"),
-    sqlUdf2("graft_theta_intersect", graft.operators.ThetaSketch.intersectionUdf))
-
-  /** `graft_theta_anotb(a, b)` → double: distinct estimate of A \ B. */
-  val thetaANotBDescriptor: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("graft_theta_anotb"),
-    new ExpressionInfo(graft.operators.ThetaSketch.getClass.getName, "graft_theta_anotb"),
-    sqlUdf2("graft_theta_anotb", graft.operators.ThetaSketch.aNotBUdf))
-
   /** `graft_canonical_url(url)` → string: the URL-dedup canonical form
     * ([[UrlCanon]] scaladoc) from SQL. Null propagates. */
   val canonicalUrlDescriptor: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
@@ -260,25 +208,16 @@ object GraftExtensions {
   /** `graft_cms_estimate(sketch, item)` → bigint: count-min frequency
     * estimate of one item off a serialized CMS
     * ([[graft.operators.CountMinTable]]) — one-sided (never under the
-    * true count); null/empty sketch estimates 0. */
+    * true count); null/empty sketch estimates 0. The scalar runs over
+    * few-KB sketch rows — sketch-table cardinality, not data-path
+    * cardinality — so the UDF bridge is the right cost class here. */
   val cmsEstimateDescriptor: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
     FunctionIdentifier("graft_cms_estimate"),
     new ExpressionInfo(graft.operators.CountMinTable.getClass.getName, "graft_cms_estimate"),
-    sqlUdf2("graft_cms_estimate", graft.operators.CountMinTable.estimateUdf))
-
-  /** `graft_kll_quantile(sketch, q)` → double: rank-q estimate off a
-    * serialized KLL sketch; q must be a literal in [0, 1]. Null/empty
-    * sketch bytes yield NaN (the [[QuantileSketch.estimateQuantile]]
-    * contract), so left-join misses stay queryable. */
-  val kllQuantileDescriptor: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("graft_kll_quantile"),
-    new ExpressionInfo(graft.operators.QuantileSketch.getClass.getName, "graft_kll_quantile"),
     (args: Seq[Expression]) => {
-      require(args.length == 2, "usage: graft_kll_quantile(sketch, q)")
-      val q = litDouble(args(1), "q")
-      require(q >= 0.0 && q <= 1.0, s"quantile rank out of [0,1]: $q")
+      require(args.length == 2, "usage: graft_cms_estimate(sketch, item)")
       import org.apache.spark.sql.graftbridge.ColumnBridge._
-      toCatalyst(graft.operators.QuantileSketch.quantileOf(column(args(0)), q))
+      toCatalyst(graft.operators.CountMinTable.estimateUdf(column(args(0)), column(args(1))))
     })
 
   /** `graft_id_hash(id, seed)` → the deterministic sampling hash every

@@ -1859,7 +1859,7 @@ object PipelineQueries {
     // finding inverted after r15 gave every probe explicit broadcast
     // hints — runtime broadcast conversion no longer buys anything,
     // so AQE's stage-by-stage materialization was pure job-count tax
-    // (St5Probe: 160 → 82 jobs, min-rep 9.9 → 9.0 s on a 4-rep A/B;
+    // (160 → 82 jobs, min-rep 9.9 → 9.0 s on a 4-rep A/B;
     // a production loop with planned broadcasts wants the same).
     "st5_unified_ingest" -> ((s, _) => {
       import s.implicits._

@@ -874,31 +874,27 @@ object RelationalQueries {
     // A14 — the PERSISTED quantile-sketch table (KLL), completing the
     // sketch family: per-key sketches built on two disjoint halves
     // round-trip through parquet as binary rows, MERGE back to one
-    // sketch per key, and the merged p50/p90 estimates must land
-    // within ±2 quantity units of the exact interpolated percentiles
-    // (KLL rank error ~1.7% at k=200 ⇒ ≲1 unit on 1..50 data). The
-    // exact values hash-check against DuckDB; a11 is the one-shot
-    // approx form — this is the persistable/mergeable one the
-    // built-in cannot do.
+    // sketch per key (kll_merge_agg_double), and the merged p50/p90
+    // estimates must land within ±2 quantity units of the exact
+    // interpolated percentiles (KLL rank error ~1.7% at the default
+    // k=200 ⇒ ≲1 unit on 1..50 data). The exact values hash-check
+    // against DuckDB; a11 is the one-shot approx form — this is the
+    // persistable/mergeable one, where history is never re-scanned.
     "a14_quantile_sketch_table" -> ((s, dir) => {
-      import graft.operators.QuantileSketch
       val li = t(s, dir, "lineitem")
-        .select(col("l_returnflag"), col("l_quantity"), col("l_partkey"))
       val path = graft.TempDirs.path(
         s"kll/a14/${dir.replaceAll("[^a-zA-Z0-9.]", "_")}")
-      QuantileSketch.sketchRows(li.filter(pmod(col("l_partkey"), lit(2)) === 0),
-          "l_returnflag", "l_quantity")
-        .withColumn("batch_id", lit(0L))
-        .unionByName(QuantileSketch.sketchRows(
-            li.filter(pmod(col("l_partkey"), lit(2)) === 1),
-            "l_returnflag", "l_quantity")
-          .withColumn("batch_id", lit(1L)))
-        .write.mode("overwrite").parquet(path)
-      val est = QuantileSketch.mergeSketches(s.read.parquet(path))
+      def half(p: Long) = li.filter(pmod(col("l_partkey"), lit(2)) === p)
+        .groupBy(col("l_returnflag").as("key"))
+        .agg(expr("kll_sketch_agg_double(CAST(l_quantity AS DOUBLE))").as("sketch"))
+        .withColumn("batch_id", lit(p))
+      half(0L).unionByName(half(1L)).write.mode("overwrite").parquet(path)
+      val est = s.read.parquet(path).groupBy(col("key"))
+        .agg(expr("kll_merge_agg_double(sketch)").as("_m"))
         .select(col("key"),
-          QuantileSketch.quantileOf(col("sketch"), 0.5).as("_p50s"),
-          QuantileSketch.quantileOf(col("sketch"), 0.9).as("_p90s"))
-      t(s, dir, "lineitem").groupBy(col("l_returnflag"))
+          expr("kll_sketch_get_quantile_double(_m, 0.5D)").as("_p50s"),
+          expr("kll_sketch_get_quantile_double(_m, 0.9D)").as("_p90s"))
+      li.groupBy(col("l_returnflag"))
         .agg(round(expr("percentile(l_quantity, 0.5D)"), 4).as("p50_exact"),
           round(expr("percentile(l_quantity, 0.9D)"), 4).as("p90_exact"))
         .join(est, col("l_returnflag") === col("key"))
@@ -914,22 +910,21 @@ object RelationalQueries {
     // intersect). The pair join is over the 5-row SKETCH table (a few
     // KB a side), never over the raw ids — at 100 TB that's the whole
     // point: overlap without a distinct-join shuffle of every id.
-    // Below the sketch's nominal capacity (4096 ids; sf cardinalities
-    // are ~150/type) theta retains every hash, so the estimates are
-    // EXACT and hash-match the oracle's true set algebra; above
-    // capacity the same query returns ~2.5%-error estimates.
+    // Below the sketch's nominal capacity (default lgNomEntries=12 ⇒
+    // 4096 ids; sf cardinalities are ~150/type) theta retains every
+    // hash, so the estimates are EXACT and hash-match the oracle's true
+    // set algebra; above capacity the same query returns ~2.5%-error
+    // estimates.
     "a15_theta_overlap" -> ((s, dir) => {
-      import graft.operators.ThetaSketch
-      val sk = ThetaSketch.sketchRows(
-        t(s, dir, "events").select("event_type", "user_id"),
-        "event_type", "user_id")
-      val a = sk.select(col("key").as("type_a"), col("sketch").as("_sa"))
-      val b = sk.select(col("key").as("type_b"), col("sketch").as("_sb"))
+      val sk = t(s, dir, "events").groupBy(col("event_type"))
+        .agg(expr("theta_sketch_agg(user_id)").as("_sk"))
+      val a = sk.select(col("event_type").as("type_a"), col("_sk").as("_sa"))
+      val b = sk.select(col("event_type").as("type_b"), col("_sk").as("_sb"))
       a.crossJoin(b).filter(col("type_a") < col("type_b"))
         .select(col("type_a"), col("type_b"),
-          ThetaSketch.estimateUdf(col("_sa")).cast("long").as("n_a"),
-          ThetaSketch.intersectionUdf(col("_sa"), col("_sb")).cast("long").as("n_both"),
-          ThetaSketch.aNotBUdf(col("_sa"), col("_sb")).cast("long").as("n_only_a"))
+          expr("theta_sketch_estimate(_sa)").as("n_a"),
+          expr("theta_sketch_estimate(theta_intersection(_sa, _sb))").as("n_both"),
+          expr("theta_sketch_estimate(theta_difference(_sa, _sb))").as("n_only_a"))
         .orderBy("type_a", "type_b")
     }),
 

@@ -653,6 +653,28 @@ class PlanAuditSpec extends SparkSpec {
     r.inputFiles.foreach(f => f should include("batch_id=1"))
   }
 
+  test("a14/a15: the sketch queries run on built-in aggregates — no Scala UDF, " +
+      "Aggregator or typed map kernel") {
+    import org.apache.spark.sql.catalyst.expressions.ScalaUDF
+    import org.apache.spark.sql.execution.{AppendColumnsExec, MapGroupsExec,
+      MapPartitionsExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.aggregate.ScalaAggregator
+    def nodes(n: SparkPlan): Seq[SparkPlan] = n match {
+      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+      case s: QueryStageExec => nodes(s.plan)
+      case other => other +: (other.children ++ other.subqueries).flatMap(nodes)
+    }
+    for (q <- Seq("a14_quantile_sketch_table", "a15_theta_overlap")) {
+      val all = nodes(SparkEntry.queries(q)(spark, sf).queryExecution.executedPlan)
+      all.collect { case k @ (_: MapPartitionsExec | _: MapGroupsExec |
+        _: AppendColumnsExec) => k.nodeName } shouldBe empty
+      all.flatMap(_.expressions.flatMap(_.collect {
+        case e @ (_: ScalaUDF | _: ScalaAggregator[_, _, _]) => e.prettyName
+      })) shouldBe empty
+    }
+  }
+
   test("whole-stage codegen covers the relational hot paths") {
     // under AQE the codegen stages only materialize in the FINAL plan,
     // so execute first, then inspect

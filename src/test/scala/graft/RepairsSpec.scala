@@ -66,8 +66,13 @@ class RepairsSpec extends SparkSpec {
     val dirty = mk(
       "a" -> (("Main St", "1", "Spokane, WA 99218", null, null)),
       "b" -> (("Elm Ave", "3", "WA", null, null)),
-      "c" -> (("Cedar St", "8", "83814", "Coeur d Alene", "ID")))
+      "c" -> (("Cedar St", "8", "83814", "Coeur d Alene", "ID")),
+      // the reference's one-off: "Arthur" → "Arthur St", and no further
+      "d" -> (("North Arthur", "4", "99201", "Spokane", "WA")),
+      "e" -> (("Oak St", "5", "99201", "Spokane", "WA")))
     val once = Repairs.clean(dirty)
+    addrOf(once, "d")._1 shouldBe "North Arthur St"
+    addrOf(once, "e")._1 shouldBe "Oak Street"
     val twice = Repairs.clean(once)
     once.exceptAll(twice).count() shouldBe 0
     twice.exceptAll(once).count() shouldBe 0
