@@ -30,6 +30,13 @@ object TempDirs {
   /** A namespaced path under the run root (not created). */
   def path(sub: String): String = s"$root/$sub"
 
+  /** The per-sfDir scratch path `<sub>/sf-<sanitized sfDir>` under the
+    * run root (not created). The `sf-` prefix matters: an absolute
+    * sfDir sanitizes to a name starting with `_`, and Spark silently
+    * skips `_`- and `.`-prefixed paths as hidden. */
+  def forSf(sub: String, sfDir: String): String =
+    path(s"$sub/sf-${sfDir.replaceAll("[^a-zA-Z0-9.]", "_")}")
+
   /** A namespaced path under the run root, with the directory itself
     * created (for stages that need the directory to exist up front,
     * e.g. a file-stream source's monitored dir). */

@@ -481,11 +481,10 @@ object Ann {
   def buildIvfIndex(embs: DataFrame, idCol: String, vecCol: String, dim: Int,
                     nCells: Int, outPath: String, iters: Int = 3): Seq[Seq[Double]] = {
     val spark = embs.sparkSession
-    import spark.implicits._
     // marker-first rebuild discipline (same as the LSH indexes): drop
-    // the old params/ before touching tables so an interrupted rebuild
-    // fails validation loudly instead of probing mixed old/new state
-    Dedup.clearIndexCommitMarker(spark, outPath)
+    // the old _index.json before touching tables so an interrupted
+    // rebuild fails validation loudly instead of probing mixed state
+    IndexControl.clear(spark, outPath)
     val cents = trainIvfCells(embs, idCol, vecCol, dim, nCells, iters)
     // a REBUILD replaces everything, including append batches — clear
     // the whole vectors tree, not just the build batch's directory
@@ -505,15 +504,12 @@ object Ann {
       .repartition(col("_cell"))
       .write.mode("overwrite").partitionBy("_cell")
       .parquet(s"$outPath/vectors/batch_id=-1")
-    cents.zipWithIndex.map { case (c, i) => (i, c) }
-      .toDF("cell", "centroid")
-      .coalesce(1).write.mode("overwrite").parquet(s"$outPath/centroids")
-    // params LAST: the commit marker — a half-built index (crash after
-    // the vectors/ write, before here) must fail [[searchIvfIndex]]'s
-    // validation instead of silently probing a readable-but-stale
-    // vectors/ + centroids/ pair
-    Dedup.writeIndexParams(spark, outPath, "n_cells" -> nCells.toLong,
-      "dim" -> dim.toLong)
+    // params + centroids LAST, in one atomic write: the commit marker —
+    // a half-built index (crash after the vectors/ write, before here)
+    // must fail [[searchIvfIndex]]'s validation instead of silently
+    // probing readable-but-stale vectors/
+    IndexControl.write(spark, outPath, IndexControl(
+      Map("n_cells" -> nCells, "dim" -> dim), centroids = Some(cents)))
     cents
   }
 
@@ -522,33 +518,14 @@ object Ann {
     new org.apache.hadoop.fs.Path(path)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  /** Stored centroid matrix of a [[buildIvfIndex]] index, validated
-    * against the params record (driver state: nCells × dim doubles). */
-  private def readIvfCentroids(spark: org.apache.spark.sql.SparkSession,
-                               indexPath: String,
-                               params: Map[String, Long]): Seq[Seq[Double]] = {
-    // read on EVERY search/append — the fast path answers the
-    // coalesce(1)-written single-file layout driver-side (~2 ms vs a
-    // ~100 ms planner resolution + collect job); any surprise falls
-    // back to the unchanged Spark read (TinyParquet contract)
-    val cents = TinyParquet.intDoubleListRows(spark, s"$indexPath/centroids")
-      .getOrElse {
-        spark.read.parquet(s"$indexPath/centroids")
-          .collect().map(r => r.getInt(0) -> r.getSeq[Double](1).toSeq).toSeq
-      }
-      .sortBy(_._1).map(_._2)
-    require(cents.length.toLong == params("n_cells"),
-      s"IVF index at $indexPath stores ${cents.length} centroids but was " +
-        s"built with n_cells=${params("n_cells")} — mixed rebuild state; rebuild it")
-    cents
-  }
+  /** Stored centroid matrix of a [[buildIvfIndex]] index (driver
+    * state: nCells × dim doubles, row i = cell i). */
+  private def ivfCentroids(ctl: IndexControl, indexPath: String): Seq[Seq[Double]] =
+    IndexControl.field(indexPath, "centroids", ctl.centroids)
 
-  /** One spec string (pqspec/, opqspec/) — the TinyParquet fast path
-    * with the historical Spark read as fallback. */
-  private def readSpecString(spark: org.apache.spark.sql.SparkSession,
-                             dir: String): String =
-    TinyParquet.singleString(spark, dir).getOrElse(
-      spark.read.parquet(dir).head().getString(0))
+  /** The stored codebooks of a [[buildIvfPqIndex]] index. */
+  private def ivfCodebooks(ctl: IndexControl, indexPath: String): Pq.Codebooks =
+    Pq.fromSpec(IndexControl.field(indexPath, "pq_spec", ctl.pqSpec))
 
   private val ivfAppendCounter = new java.util.concurrent.atomic.AtomicLong()
 
@@ -571,16 +548,17 @@ object Ann {
                        indexPath: String,
                        batchId: Option[Long] = None): Unit = {
     val spark = embs.sparkSession
-    val params = Dedup.readIndexParams(spark, indexPath)
+    val ctl = IndexControl.read(spark, indexPath)
+    val params = ctl.params
     require(params.contains("n_cells") && params.contains("dim"),
-      s"params/ under $indexPath is not an IVF index record")
+      s"${IndexControl.FileName} under $indexPath is not an IVF index record")
     // an IVF-PQ index's rows carry a pq_code column this append would
     // not produce — NULL codes would silently vanish from ADC ranking;
     // fail loudly instead (use appendToIvfPqIndex)
     require(!params.contains("pq_m"),
       s"$indexPath is an IVF-PQ index — append through appendToIvfPqIndex " +
         "so new rows carry their codes")
-    val cents = readIvfCentroids(spark, indexPath, params)
+    val cents = ivfCentroids(ctl, indexPath)
     val id = batchId.getOrElse(
       System.currentTimeMillis() * 1000 + (ivfAppendCounter.incrementAndGet() % 1000))
     // vectors/ is this index's ONLY batch table (centroids are a
@@ -604,12 +582,16 @@ object Ann {
     * after (pinned in AnnSpec). Same crash discipline as the LSH
     * compactions: stage under `_compact_tmp/`, drop the commit marker,
     * swap, rewrite the marker — an interrupted swap fails
-    * [[searchIvfIndex]]'s validation loudly. */
+    * [[searchIvfIndex]]'s validation loudly. The rewritten marker is
+    * the record read at the start, unchanged: compaction is layout
+    * maintenance, not a retrain, so `retrain_version` carries through
+    * (resetting the monotone counter would let the NEXT maintain
+    * re-issue a version and serving code miss that cell ids changed). */
   def compactIvfIndex(spark: org.apache.spark.sql.SparkSession,
                       indexPath: String): Unit = {
-    val params = Dedup.readIndexParams(spark, indexPath)
-    require(params.contains("n_cells") && params.contains("dim"),
-      s"params/ under $indexPath is not an IVF index record")
+    val ctl = IndexControl.read(spark, indexPath)
+    require(ctl.params.contains("n_cells") && ctl.params.contains("dim"),
+      s"${IndexControl.FileName} under $indexPath is not an IVF index record")
     val fs = ivfFs(spark, indexPath)
     val tmp = s"$indexPath/_compact_tmp"
     fs.delete(new org.apache.hadoop.fs.Path(tmp), true)
@@ -618,7 +600,7 @@ object Ann {
       .repartition(col("_cell"))
       .write.mode("overwrite").partitionBy("_cell")
       .parquet(s"$tmp/vectors/batch_id=-1")
-    Dedup.clearIndexCommitMarker(spark, indexPath) // probes fail loudly
+    IndexControl.clear(spark, indexPath) // probes fail loudly
     // the swap replaces the vectors dir (manifests included): remember
     // and re-enable, like Dedup.compactIndex — pinned readers do not
     // survive an index-wide compaction (probes pause for the swap)
@@ -628,13 +610,7 @@ object Ann {
       new org.apache.hadoop.fs.Path(s"$indexPath/vectors"))
     fs.delete(new org.apache.hadoop.fs.Path(tmp), true)
     if (wasEnabled) Snapshot.enable(spark, s"$indexPath/vectors")
-    // carry retrain_version through (r21, ADVICE r20): compaction is
-    // layout maintenance, not a retrain — resetting the monotone
-    // counter would let the NEXT maintain re-issue version 1 and
-    // serving code comparing versions miss that cell ids changed
-    Dedup.writeIndexParams(spark, indexPath,
-      (Seq("n_cells" -> params("n_cells"), "dim" -> params("dim")) ++
-        params.get("retrain_version").map("retrain_version" -> _)): _*)
+    IndexControl.write(spark, indexPath, ctl)
   }
 
   /** Per-cell OCCUPANCY IMBALANCE of a persisted IVF/IVF-PQ index:
@@ -650,7 +626,7 @@ object Ann {
                        indexPath: String): Double = {
     val params = Dedup.readIndexParams(spark, indexPath)
     require(params.contains("n_cells"),
-      s"params/ under $indexPath is not an IVF index record")
+      s"${IndexControl.FileName} under $indexPath is not an IVF index record")
     val counts = Snapshot.read(spark, s"$indexPath/vectors")
       .groupBy(col("_cell")).agg(count(lit(1)).as("n"))
       .select(col("n")).collect().map(_.getLong(0))
@@ -669,9 +645,10 @@ object Ann {
     * gives the new mass its own cells (AnnSpec pins the degrade →
     * restore cycle).
     *
-    * Same atomicity as [[compactIvfIndex]]: stage vectors AND
-    * centroids under `_maintain_tmp/`, drop the commit marker, swap,
-    * rewrite params LAST — an interrupted swap fails
+    * Same atomicity as [[compactIvfIndex]]: stage vectors under
+    * `_maintain_tmp/`, drop the commit marker, swap, then write params
+    * and the new centroids LAST, in one atomic write — an interrupted
+    * swap fails
     * [[searchIvfIndex]]'s validation loudly instead of probing mixed
     * old/new state. The rewritten params carry `retrain_version`
     * (monotone counter, like the codebook registry's versions) so
@@ -684,7 +661,7 @@ object Ann {
                        iters: Int = 3): Unit = {
     val params = Dedup.readIndexParams(spark, indexPath)
     require(params.contains("n_cells") && params.contains("dim"),
-      s"params/ under $indexPath is not an IVF index record")
+      s"${IndexControl.FileName} under $indexPath is not an IVF index record")
     require(!params.contains("pq_m"),
       s"$indexPath is an IVF-PQ index — its codes derive from the " +
         "centroids; maintain it with a buildIvfPqIndex rebuild instead")
@@ -703,23 +680,17 @@ object Ann {
       .repartition(col("_cell"))
       .write.mode("overwrite").partitionBy("_cell")
       .parquet(s"$tmp/vectors/batch_id=-1")
-    import spark.implicits._
-    cents.zipWithIndex.map { case (c, i) => (i, c) }
-      .toDF("cell", "centroid")
-      .coalesce(1).write.mode("overwrite").parquet(s"$tmp/centroids")
-    Dedup.clearIndexCommitMarker(spark, indexPath) // probes fail loudly
+    IndexControl.clear(spark, indexPath) // probes fail loudly
     val wasEnabled = Snapshot.isEnabled(spark, s"$indexPath/vectors")
     fs.delete(new org.apache.hadoop.fs.Path(s"$indexPath/vectors"), true)
     fs.rename(new org.apache.hadoop.fs.Path(s"$tmp/vectors"),
       new org.apache.hadoop.fs.Path(s"$indexPath/vectors"))
-    fs.delete(new org.apache.hadoop.fs.Path(s"$indexPath/centroids"), true)
-    fs.rename(new org.apache.hadoop.fs.Path(s"$tmp/centroids"),
-      new org.apache.hadoop.fs.Path(s"$indexPath/centroids"))
     fs.delete(new org.apache.hadoop.fs.Path(tmp), true)
     if (wasEnabled) Snapshot.enable(spark, s"$indexPath/vectors")
-    Dedup.writeIndexParams(spark, indexPath,
-      "n_cells" -> params("n_cells"), "dim" -> params("dim"),
-      "retrain_version" -> (params.getOrElse("retrain_version", 0L) + 1L))
+    IndexControl.write(spark, indexPath, IndexControl(
+      Map("n_cells" -> params("n_cells"), "dim" -> params("dim"),
+        "retrain_version" -> (params.getOrElse("retrain_version", 0L) + 1L)),
+      centroids = Some(cents)))
   }
 
   /** [[maintainIvfIndex]] for IVF-PQ indexes: drift maintenance must
@@ -738,25 +709,19 @@ object Ann {
                          iters: Int = 3, lloydIters: Int = 3): Unit = {
     val params = Dedup.readIndexParams(spark, indexPath)
     require(params.contains("pq_m"),
-      s"params/ under $indexPath is not an IVF-PQ index record — use " +
+      s"${IndexControl.FileName} under $indexPath is not an IVF-PQ index record — use " +
         "maintainIvfIndex for plain IVF")
     // eager localCheckpoint: the rebuild DELETES vectors/ before its
     // rewrite, so the source rows must be materialized off the files
     val rows = Snapshot.read(spark, s"$indexPath/vectors")
       .drop("batch_id", "_cell", "pq_code").dropDuplicates()
       .localCheckpoint()
-    buildIvfPqIndex(rows, idCol, vecCol, params("dim").toInt,
-      params("n_cells").toInt, m = params("pq_m").toInt,
-      kCodes = params("pq_k").toInt, outPath = indexPath, iters = iters,
-      lloydIters = lloydIters,
+    buildIvfPq(rows, idCol, vecCol, params("dim").toInt,
+      params("n_cells").toInt, params("pq_m").toInt, params("pq_k").toInt,
+      indexPath, iters, lloydIters, maxTrainRows = 0,
       residual = params.getOrElse("pq_residual", 0L) == 1L,
-      rotate = params.getOrElse("pq_rotate", 0L) == 1L)
-    Dedup.writeIndexParams(spark, indexPath,
-      "n_cells" -> params("n_cells"), "dim" -> params("dim"),
-      "pq_m" -> params("pq_m"), "pq_k" -> params("pq_k"),
-      "pq_residual" -> params.getOrElse("pq_residual", 0L),
-      "pq_rotate" -> params.getOrElse("pq_rotate", 0L),
-      "retrain_version" -> (params.getOrElse("retrain_version", 0L) + 1L))
+      rotate = params.getOrElse("pq_rotate", 0L) == 1L,
+      retrainVersion = Some(params.getOrElse("retrain_version", 0L) + 1L))
   }
 
   /** Search a [[buildIvfIndex]] index: pick the nProbe cells whose
@@ -773,13 +738,14 @@ object Ann {
     // semantics, matching requireIndexParams on the LSH indexes): a
     // params-less half-built index throws; a query vector whose dim
     // differs from the build's would mis-probe silently — error instead
-    val params = Dedup.readIndexParams(spark, indexPath)
+    val ctl = IndexControl.read(spark, indexPath)
+    val params = ctl.params
     require(params.contains("n_cells") && params.contains("dim"),
-      s"params/ under $indexPath is not an IVF index record")
+      s"${IndexControl.FileName} under $indexPath is not an IVF index record")
     require(params("dim") == queryVec.length.toLong,
       s"IVF index at $indexPath was built with dim=${params("dim")} but " +
         s"queried with a ${queryVec.length}-dim vector")
-    val cents = readIvfCentroids(spark, indexPath, params)
+    val cents = ivfCentroids(ctl, indexPath)
     val qUnit = unit(queryVec)
     val probeCells = cents.map(unit).zipWithIndex
       .map { case (c, i) => (c.zip(qUnit).map { case (a, b) => a * b }.sum, i) }
@@ -816,7 +782,7 @@ object Ann {
     * inner-product decomposition the cosine expression doesn't carry);
     * the shortlist rerank is the recall floor either way, exactly as
     * in [[Pq.topKReranked]]. The codebook spec persists INSIDE the
-    * index (`pqspec/`), so search rebuilds the exact books from disk —
+    * index (`pq_spec` in `_index.json`), so search rebuilds the exact books from disk —
     * params carry (pq_m, pq_k) and gate [[appendToIvfIndex]] loudly.
     * Same marker-first rebuild discipline as [[buildIvfIndex]]. */
   /** r = x − cent(cell): the residual the IVFADC codes quantize. The
@@ -844,10 +810,19 @@ object Ann {
                       outPath: String, iters: Int = 3, lloydIters: Int = 3,
                       maxTrainRows: Long = 0,
                       residual: Boolean = false,
-                      rotate: Boolean = false): Seq[Seq[Double]] = {
+                      rotate: Boolean = false): Seq[Seq[Double]] =
+    buildIvfPq(embs, idCol, vecCol, dim, nCells, m, kCodes, outPath, iters,
+      lloydIters, maxTrainRows, residual, rotate, retrainVersion = None)
+
+  /** [[buildIvfPqIndex]], stamping `retrainVersion` (the
+    * [[maintainIvfPqIndex]] counter) into the same atomic marker write. */
+  private def buildIvfPq(embs: DataFrame, idCol: String, vecCol: String,
+                         dim: Int, nCells: Int, m: Int, kCodes: Int,
+                         outPath: String, iters: Int, lloydIters: Int,
+                         maxTrainRows: Long, residual: Boolean, rotate: Boolean,
+                         retrainVersion: Option[Long]): Seq[Seq[Double]] = {
     val spark = embs.sparkSession
-    import spark.implicits._
-    Dedup.clearIndexCommitMarker(spark, outPath)
+    IndexControl.clear(spark, outPath)
     // rotate=true is the OPQ pretransform (Faiss "OPQ_d,IVFx,PQm"
     // lineage): an orthogonal R learned once on the raw vectors
     // (Opq.train's alternation — we keep the rotation, the IVF cells
@@ -893,31 +868,26 @@ object Ann {
       .repartition(col("_cell"))
       .write.mode("overwrite").partitionBy("_cell")
       .parquet(s"$outPath/vectors/batch_id=-1")
-    cents.zipWithIndex.map { case (c, i) => (i, c) }
-      .toDF("cell", "centroid")
-      .coalesce(1).write.mode("overwrite").parquet(s"$outPath/centroids")
-    Seq(Tuple1(Pq.spec(cb))).toDF("spec")
-      .coalesce(1).write.mode("overwrite").parquet(s"$outPath/pqspec")
-    rot.foreach { r =>
-      Seq(Tuple1(Opq.rotationSpec(r))).toDF("spec")
-        .coalesce(1).write.mode("overwrite").parquet(s"$outPath/opqspec")
-    }
-    Dedup.writeIndexParams(spark, outPath, "n_cells" -> nCells.toLong,
-      "dim" -> dim.toLong, "pq_m" -> m.toLong, "pq_k" -> kCodes.toLong,
-      "pq_residual" -> (if (residual) 1L else 0L),
-      "pq_rotate" -> (if (rotate) 1L else 0L))
+    // the whole model — params, centroids, codebooks, rotation — in
+    // ONE atomic write, LAST: the commit marker
+    IndexControl.write(spark, outPath, IndexControl(
+      Map[String, Long]("n_cells" -> nCells, "dim" -> dim, "pq_m" -> m,
+        "pq_k" -> kCodes, "pq_residual" -> (if (residual) 1L else 0L),
+        "pq_rotate" -> (if (rotate) 1L else 0L)) ++
+        retrainVersion.map("retrain_version" -> _),
+      centroids = Some(cents), pqSpec = Some(Pq.spec(cb)),
+      opqSpec = rot.map(Opq.rotationSpec)))
     cents
   }
 
   /** The persisted OPQ rotation of a rotate=true index, None otherwise
-    * — the `pq_rotate` param is the authority, `opqspec/` the artifact
+    * — the `pq_rotate` param is the authority, `opq_spec` the artifact
     * (orthonormality re-checked on every load). */
-  private def readIvfRotation(spark: org.apache.spark.sql.SparkSession,
-                              indexPath: String,
-                              params: Map[String, Long]): Option[Array[Array[Double]]] =
-    if (params.getOrElse("pq_rotate", 0L) != 1L) None
+  private def ivfRotation(ctl: IndexControl,
+                          indexPath: String): Option[Array[Array[Double]]] =
+    if (ctl.params.getOrElse("pq_rotate", 0L) != 1L) None
     else Some(Opq.rotationFromSpec(
-      readSpecString(spark, s"$indexPath/opqspec")))
+      IndexControl.field(indexPath, "opq_spec", ctl.opqSpec)))
 
   /** Append to an IVF-PQ index: rows are cell-assigned AND encoded
     * with the index's own persisted codebooks before landing — the
@@ -926,17 +896,18 @@ object Ann {
                          indexPath: String,
                          batchId: Option[Long] = None): Unit = {
     val spark = embs.sparkSession
-    val params = Dedup.readIndexParams(spark, indexPath)
+    val ctl = IndexControl.read(spark, indexPath)
+    val params = ctl.params
     require(params.contains("pq_m"),
-      s"params/ under $indexPath is not an IVF-PQ index record")
-    val cents = readIvfCentroids(spark, indexPath, params)
-    val cb = Pq.fromSpec(readSpecString(spark, s"$indexPath/pqspec"))
+      s"${IndexControl.FileName} under $indexPath is not an IVF-PQ index record")
+    val cents = ivfCentroids(ctl, indexPath)
+    val cb = ivfCodebooks(ctl, indexPath)
     val id = batchId.getOrElse(
       System.currentTimeMillis() * 1000 + (ivfAppendCounter.incrementAndGet() % 1000))
     val residual = params.getOrElse("pq_residual", 0L) == 1L
     // a rotate=true index's appends go through the SAME stored
     // rotation: assign + encode in rotated space, store raw floats
-    val rot = readIvfRotation(spark, indexPath, params)
+    val rot = ivfRotation(ctl, indexPath)
     val workEmbs = rot match {
       case Some(r) => embs.withColumn("_rvec", Opq.rotate(col(vecCol), r))
       case None => embs
@@ -963,9 +934,10 @@ object Ann {
                        queryVec: Seq[Double], k: Int, nProbe: Int = 2,
                        shortlist: Int = 0): DataFrame = {
     import spark.implicits._
-    val params = Dedup.readIndexParams(spark, indexPath)
+    val ctl = IndexControl.read(spark, indexPath)
+    val params = ctl.params
     require(params.contains("pq_m") && params.contains("n_cells"),
-      s"params/ under $indexPath is not an IVF-PQ index record")
+      s"${IndexControl.FileName} under $indexPath is not an IVF-PQ index record")
     require(params("dim") == queryVec.length.toLong,
       s"IVF-PQ index at $indexPath was built with dim=${params("dim")} but " +
         s"queried with a ${queryVec.length}-dim vector")
@@ -976,13 +948,13 @@ object Ann {
     // threshold silently flips the ADC ranking into a corpus-wide
     // global sort. k itself wins if the caller truly asked past the cap.
     val n = math.max(k.toLong, math.min(requested.toLong, rankShortlistCap)).toInt
-    val cents = readIvfCentroids(spark, indexPath, params)
-    val cb = Pq.fromSpec(readSpecString(spark, s"$indexPath/pqspec"))
+    val cents = ivfCentroids(ctl, indexPath)
+    val cb = ivfCodebooks(ctl, indexPath)
     // a rotate=true index lives wholly in rotated space (cells, codes,
     // centroids) — rotate the query driver-side (one dim² mat-vec) and
     // probe/rank with it; the rerank below stays RAW query vs RAW
     // floats, because the orthogonal R preserves cosine exactly
-    val qRanked = readIvfRotation(spark, indexPath, params)
+    val qRanked = ivfRotation(ctl, indexPath)
       .map(r => Opq.rotateLocal(r, queryVec)).getOrElse(queryVec)
     val qUnit = unit(qRanked)
     val probeCells = cents.map(unit).zipWithIndex
@@ -1027,23 +999,24 @@ object Ann {
                             k: Int, nProbe: Int = 2,
                             shortlist: Int = 0): DataFrame = {
     import spark.implicits._
-    val params = Dedup.readIndexParams(spark, indexPath)
+    val ctl = IndexControl.read(spark, indexPath)
+    val params = ctl.params
     require(params.contains("pq_m") && params.contains("n_cells"),
-      s"params/ under $indexPath is not an IVF-PQ index record")
+      s"${IndexControl.FileName} under $indexPath is not an IVF-PQ index record")
     val requested = if (shortlist > 0) shortlist else math.max(10 * k, 100)
     require(requested >= k, s"shortlist $requested smaller than k=$k")
     // same cap as the single-query path: the TopKByScore heap is
     // bounded per query, and per-query shortlists past the fence are
     // never useful — they only grow the rerank join
     val n = math.max(k.toLong, math.min(requested.toLong, rankShortlistCap)).toInt
-    val cents = readIvfCentroids(spark, indexPath, params)
-    val cb = Pq.fromSpec(readSpecString(spark, s"$indexPath/pqspec"))
+    val cents = ivfCentroids(ctl, indexPath)
+    val cb = ivfCodebooks(ctl, indexPath)
     val unitCents = cents.map(unit)
     // rotate=true: every query rotates IN-PLAN (one fused mat-vec per
     // query row — broadcast-class work, the query set is small by
     // contract) and probes/ranks against the rotated-space centroids
     // and reconstructions; the rerank keeps raw qvec vs raw floats
-    val rot = readIvfRotation(spark, indexPath, params)
+    val rot = ivfRotation(ctl, indexPath)
     val rankVec: Column = rot match {
       case Some(r) => Opq.rotate(col(qvecCol), r)
       case None => col(qvecCol)

@@ -792,44 +792,14 @@ object Dedup {
     *    sum is an UPPER bound (the same bucket over-cap in several
     *    writes counts once per write) — a compaction rebuild resets
     *    them to exact;
-    *  - `params/` — the build knobs, validated on every probe/append
-    *    (mismatched key knobs compute keys that match nothing — an
-    *    error, never an empty result). Written LAST: it is also the
-    *    build's commit marker.
+    *  - `_index.json` — the build knobs ([[IndexControl]]), validated
+    *    on every probe/append (mismatched key knobs compute keys that
+    *    match nothing — an error, never an empty result). Written LAST:
+    *    it is also the build's commit marker.
     *
     * Singleton buckets ARE indexed (unlike the batch pass): an
     * incoming doc must be able to match a corpus doc that had no
     * in-corpus near-dup. */
-  /** One-row build-parameter record stored beside each LSH index and
-    * VALIDATED at probe time: a probe whose key knobs differ from the
-    * build's computes keys that match nothing and would silently
-    * ingest every duplicate — a mismatch must be an error, not an
-    * empty result. Written LAST by the builds, so `params/` doubles as
-    * the build's commit marker: a half-built index (crash before the
-    * bucket write) fails validation loudly instead of probing empty. */
-  private[operators] def writeIndexParams(spark: org.apache.spark.sql.SparkSession,
-                                          path: String, params: (String, Long)*): Unit =
-    spark.range(1)
-      .select(params.map { case (k, v) => lit(v).as(k) }: _*)
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/params")
-
-  /** Delete `params/` (the commit marker) at the START of an in-place
-    * rebuild, restoring fail-loud marker semantics for compaction: the
-    * marker-written-LAST discipline only protects FRESH builds — on a
-    * rebuild at the same path the OLD marker (same knob values) would
-    * stay readable while the tables underneath are sequentially
-    * overwritten, so a crash mid-rebuild would leave a mixed old/new
-    * index that PASSES validation and probes silently inconsistent
-    * data. With the marker gone first, that crash leaves an index that
-    * [[requireIndexParams]] rejects loudly. Probes must pause during a
-    * rebuild either way (documented on the builds). */
-  private[operators] def clearIndexCommitMarker(
-      spark: org.apache.spark.sql.SparkSession, path: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(s"$path/params")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) fs.delete(p, true)
-  }
-
   /** The stored build parameters of an index at `path`, as a name→value
     * map — the read half of the params contract: consumers that should
     * FOLLOW the index's knobs instead of asserting their own (e.g. the
@@ -838,66 +808,14 @@ object Dedup {
     * (via the same fail-loud path as [[requireIndexParams]]) on a
     * params-less / half-built index. */
   def readIndexParams(spark: org.apache.spark.sql.SparkSession,
-                      path: String): Map[String, Long] = {
-    // the exact historical read — also the fallback that keeps error
-    // semantics byte-identical (missing/half-written params fail with
-    // the same message) and handles any layout the fast path declines
-    def sparkRead(): Map[String, Long] = {
-      val row =
-        try spark.read.parquet(s"$path/params").collect()(0)
-        catch { case e: org.apache.spark.sql.AnalysisException =>
-          throw new IllegalStateException(
-            s"no readable params/ under $path — not a completed graft index " +
-              "(interrupted build, or a pre-params layout); rebuild it", e)
-        }
-      row.schema.fieldNames.map(f => f -> row.getLong(row.fieldIndex(f))).toMap
-    }
-    // FAST PATH (r21): params/ is ONE single-row all-INT64 parquet file
-    // the build coalesced, and it is VALIDATED on every probe/append —
-    // a full `spark.read` datasource resolution plus a one-task Spark
-    // job per validation (~100 ms of driver latency) for a record a
-    // driver-side parquet row read answers in ~2 ms. Anything
-    // unexpected (several files, several rows, non-long fields, read
-    // errors) falls back to the Spark read above, so behavior — error
-    // messages included — never changes, only the common-case cost.
-    try {
-      val conf = spark.sparkContext.hadoopConfiguration
-      val dir = new org.apache.hadoop.fs.Path(s"$path/params")
-      val fs = dir.getFileSystem(conf)
-      val files = fs.listStatus(dir).filter(f => f.isFile &&
-        f.getPath.getName.endsWith(".parquet") &&
-        !f.getPath.getName.startsWith("_") && !f.getPath.getName.startsWith("."))
-      if (files.length != 1) return sparkRead()
-      val rdr = org.apache.parquet.hadoop.ParquetReader
-        .builder(new org.apache.parquet.hadoop.example.GroupReadSupport(),
-          files(0).getPath)
-        .withConf(conf).build()
-      try {
-        val g = rdr.read()
-        if (g == null || rdr.read() != null) return sparkRead()
-        val t = g.getType
-        import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
-        (0 until t.getFieldCount).map { i =>
-          val f = t.getType(i)
-          if (!f.isPrimitive ||
-              f.asPrimitiveType.getPrimitiveTypeName != PrimitiveTypeName.INT64 ||
-              g.getFieldRepetitionCount(i) != 1)
-            return sparkRead()
-          f.getName -> g.getLong(i, 0)
-        }.toMap
-      } finally rdr.close()
-    } catch {
-      case _: java.io.FileNotFoundException => sparkRead() // no params/: same loud error
-      case scala.util.control.NonFatal(_) => sparkRead()
-    }
-  }
+                      path: String): Map[String, Long] =
+    IndexControl.read(spark, path).params
 
   private[operators] def requireIndexParams(spark: org.apache.spark.sql.SparkSession,
                                             path: String, params: (String, Long)*): Unit = {
     val stored = readIndexParams(spark, path)
     params.foreach { case (k, v) =>
-      val s = stored.getOrElse(k, throw new IllegalStateException(
-        s"params/ under $path has no field $k — not this index type's layout"))
+      val s = IndexControl.param(stored, path, k)
       require(s == v,
         s"index at $path was built with $k=$s but probed with $k=$v — " +
           "keys would match nothing; probe with the build parameters")
@@ -975,8 +893,8 @@ object Dedup {
     // drop the OLD commit marker before touching tables: an in-place
     // rebuild (the documented compaction path) must fail validation if
     // interrupted, not pass it on the stale marker (see
-    // [[clearIndexCommitMarker]]); probes pause during a rebuild
-    clearIndexCommitMarker(docs.sparkSession, path)
+    // [[IndexControl.clear]]); probes pause during a rebuild
+    IndexControl.clear(docs.sparkSession, path)
     // a rebuild resets content to batch -1 AND resets the manifest
     // HISTORY (Snapshot.clearManifests): a surviving stale root
     // manifest would point readers at deleted batch dirs and make
@@ -996,8 +914,9 @@ object Dedup {
         writeMinhashIndexTables(sh, buckets, path, maxBucket, batch = None)
         if (wasEnabled) Snapshot.enableSub(docs.sparkSession, path, "buckets")
         // params LAST: the commit marker
-        writeIndexParams(docs.sparkSession, path, "shingle_k" -> shingleK,
-          "num_hashes" -> numHashes, "bands" -> bands, "max_bucket" -> maxBucket)
+        IndexControl.write(docs.sparkSession, path, IndexControl(Map(
+          "shingle_k" -> shingleK, "num_hashes" -> numHashes, "bands" -> bands,
+          "max_bucket" -> maxBucket)))
       } finally buckets.unpersist(blocking = false)
     } finally sh.unpersist(blocking = false)
   }
@@ -1017,7 +936,7 @@ object Dedup {
     * probe ([[minhashNearDupsAgainstIndex]]) → drop dups → append the
     * survivors → next batch sees them. Key parameters (shingleK,
     * numHashes, bands — the ones that shape bucket keys) are validated
-    * against the stored `params/`; `maxBucket` is NOT validated — it
+    * against the stored `_index.json`; `maxBucket` is NOT validated — it
     * only caps this batch's bucket fanout, and raising it on later
     * batches after reading `drop_stats/` is legitimate.
     *
@@ -1043,7 +962,7 @@ object Dedup {
       numHashes, bands, maxBucket, batchId)
   }
 
-  /** [[appendToMinhashIndex]] minus the per-call `params/` validation
+  /** [[appendToMinhashIndex]] minus the per-call `_index.json` validation
     * read — for the streaming loops that validated at stream start
     * (per-micro-batch params reads are scheduler tax; see
     * [[minhashProbePrechecked]]). */
@@ -1103,7 +1022,7 @@ object Dedup {
       .select(col("doc"), col(if (dataTable == "shingles") "sh" else "vec"))
       .dropDuplicates("doc")
     rebuild(rows, tmp) // stage the fresh build; live tables untouched
-    clearIndexCommitMarker(spark, path) // probes now fail loudly
+    IndexControl.clear(spark, path) // probes now fail loudly
     // the swap replaces each sub-table directory wholesale; an enabled
     // index re-seeds its ROOT manifest on the fresh layout afterwards,
     // or compaction would leave a stale manifest pointing at batch
@@ -1126,9 +1045,10 @@ object Dedup {
     * over the same docs (pinned in DedupSpec). */
   def compactMinhashIndex(spark: org.apache.spark.sql.SparkSession,
                           path: String): Unit = {
-    val p = readIndexParams(spark, path)
-    val (k, nh, bands) = (p("shingle_k").toInt, p("num_hashes").toInt, p("bands").toInt)
-    val cap = p.getOrElse("max_bucket", 1000L).toInt
+    val ctl = IndexControl.read(spark, path)
+    def p(key: String) = IndexControl.param(ctl.params, path, key).toInt
+    val (k, nh, bands) = (p("shingle_k"), p("num_hashes"), p("bands"))
+    val cap = ctl.params.getOrElse("max_bucket", 1000L).toInt
     compactIndex(spark, path, "shingles", (sh, tmp) => {
       val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
       val shP = sh.persist(lvl)
@@ -1139,18 +1059,17 @@ object Dedup {
         finally buckets.unpersist(blocking = false)
       } finally shP.unpersist(blocking = false)
     })
-    // marker LAST — the index is live again
-    writeIndexParams(spark, path, "shingle_k" -> k, "num_hashes" -> nh,
-      "bands" -> bands, "max_bucket" -> cap)
+    IndexControl.write(spark, path, ctl) // marker LAST — the index is live again
   }
 
   /** Compact a [[buildEmbeddingIndex]] index in place from its own
     * `vectors/` table — the embedding twin of [[compactMinhashIndex]]. */
   def compactEmbeddingIndex(spark: org.apache.spark.sql.SparkSession,
                             path: String): Unit = {
-    val p = readIndexParams(spark, path)
-    val (bits, tables, dim) = (p("bits").toInt, p("tables").toInt, p("dim").toInt)
-    val cap = p.getOrElse("max_bucket", 1000L).toInt
+    val ctl = IndexControl.read(spark, path)
+    def p(key: String) = IndexControl.param(ctl.params, path, key).toInt
+    val (bits, tables, dim) = (p("bits"), p("tables"), p("dim"))
+    val cap = ctl.params.getOrElse("max_bucket", 1000L).toInt
     compactIndex(spark, path, "vectors", (dv, tmp) => {
       val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
       val dvP = dv.persist(lvl)
@@ -1160,8 +1079,7 @@ object Dedup {
         finally buckets.unpersist(blocking = false)
       } finally dvP.unpersist(blocking = false)
     })
-    writeIndexParams(spark, path, "bits" -> bits, "tables" -> tables,
-      "dim" -> dim, "max_bucket" -> cap)
+    IndexControl.write(spark, path, ctl)
   }
 
   /** Near-dups of an INCOMING batch against a [[buildMinhashIndex]]
@@ -1270,7 +1188,7 @@ object Dedup {
   }
 
   /** [[minhashNearDupsAgainstIndexWithStats]] MINUS the per-call
-    * `params/` round-trips — for callers that validated the index once
+    * `_index.json` round-trips — for callers that validated the index once
     * and own every probe/append against it (the streaming ingest
     * loops, which pay this per MICRO-BATCH: two params reads per
     * modality per batch are pure scheduler tax when the loop read
@@ -1712,8 +1630,8 @@ object Dedup {
   def buildEmbeddingIndex(embs: DataFrame, idCol: String, vecCol: String,
                           dim: Int, path: String, bits: Int = 12,
                           tables: Int = 4, maxBucket: Int = 1000): Unit = {
-    // marker-first rebuild discipline — see [[clearIndexCommitMarker]]
-    clearIndexCommitMarker(embs.sparkSession, path)
+    // marker-first rebuild discipline — see [[IndexControl.clear]]
+    IndexControl.clear(embs.sparkSession, path)
     val wasEnabled = Snapshot.isEnabled(embs.sparkSession, path) // see buildMinhashIndex
     Snapshot.clearManifests(embs.sparkSession, path)
     val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
@@ -1726,8 +1644,9 @@ object Dedup {
         writeEmbeddingIndexTables(dv, buckets, path, maxBucket, batch = None)
         if (wasEnabled) Snapshot.enableSub(embs.sparkSession, path, "buckets")
         // params LAST: the commit marker
-        writeIndexParams(embs.sparkSession, path, "bits" -> bits,
-          "tables" -> tables, "dim" -> dim, "max_bucket" -> maxBucket)
+        IndexControl.write(embs.sparkSession, path, IndexControl(Map(
+          "bits" -> bits, "tables" -> tables, "dim" -> dim,
+          "max_bucket" -> maxBucket)))
       } finally buckets.unpersist(blocking = false)
     } finally dv.unpersist(blocking = false)
   }
@@ -1839,7 +1758,7 @@ object Dedup {
   }
 
   /** The embedding twin of [[minhashProbePrechecked]]: no per-call
-    * `params/` round-trips — for the streaming loops that validated
+    * `_index.json` round-trips — for the streaming loops that validated
     * once at stream start. */
   private[graft] def embeddingProbePrechecked(
       incoming: DataFrame, idCol: String, vecCol: String, dim: Int,

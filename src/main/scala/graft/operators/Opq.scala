@@ -425,7 +425,7 @@ object Opq {
   }
 
   /** Rotation-only spec (no codebooks): what an OPQ-rotated IVF-PQ
-    * index persists beside its own `pqspec` — the rotation pretrains
+    * index persists beside its own `Pq.spec` — the rotation pretrains
     * once and the IVF + residual codebooks train in the rotated basis,
     * so the two artifacts version independently. Exact
     * `Double.toString` round-trip like [[spec]]. */

@@ -164,7 +164,10 @@ object Retention {
     if (!fs.listStatus(dir).exists(s =>
       s.isDirectory && s.getPath.getName.startsWith("batch_id=")))
       return Map.empty
-    spark.read.parquet(dir.toString).collect().map { r =>
+    // read the batch dirs, not the `_`-prefixed ledger root: Spark
+    // skips a hidden root path with an "All paths were ignored" warning
+    spark.read.option("basePath", dir.toString)
+      .parquet(s"$dir/batch_id=*").collect().map { r =>
       r.getAs[Number]("batch_id").longValue() ->
         (r.getTimestamp(r.fieldIndex("min_ts")),
           r.getTimestamp(r.fieldIndex("max_ts")))

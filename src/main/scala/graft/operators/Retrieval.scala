@@ -73,13 +73,13 @@ object Retrieval {
   // ONCE, partitioned by a term-hash bucket so a query's scan is
   // partition-pruned to its terms' buckets. Layout (the family
   // conventions of the MinHash/IVF indexes — batch_id level for
-  // idempotent appends, `params/` written last as the commit marker):
+  // idempotent appends, `_index.json` written last as the commit marker):
   //
   //   postings/batch_id=N/bucket=B/  (idCol, dl, term, tf)
   //   terms/batch_id=N/bucket=B/     (term, df)   — df additive per batch
   //   stats/batch_id=N/              (n_docs, dl_sum) — additive, so
   //                                  avgdl folds exactly across appends
-  //   params/                        (n_buckets)  — commit marker
+  //   _index.json                    (n_buckets)  — commit marker
   //
   // Because df, n_docs, and dl_sum are all additive over disjoint doc
   // batches, an APPEND needs no read-modify-write of global state: the
@@ -131,7 +131,7 @@ object Retrieval {
                         outPath: String, nBuckets: Int = 64): Unit = {
     require(nBuckets > 0, s"nBuckets must be positive: $nBuckets")
     val spark = docs.sparkSession
-    Dedup.clearIndexCommitMarker(spark, outPath)
+    IndexControl.clear(spark, outPath)
     val fs = new org.apache.hadoop.fs.Path(outPath)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     // rebuild = index reset: a previously enabled index re-seeds its
@@ -144,8 +144,14 @@ object Retrieval {
     val (postings, termDf, stats) = bucketed(docs, idCol, textCol, nBuckets)
     writeBatch(outPath, -1L, postings, termDf, stats)
     if (wasEnabled) Snapshot.enableSub(spark, outPath, "postings")
-    Dedup.writeIndexParams(spark, outPath, "n_buckets" -> nBuckets.toLong)
+    IndexControl.write(spark, outPath, IndexControl(Map("n_buckets" -> nBuckets)))
   }
+
+  /** The bucket count a [[buildPostingIndex]] index was built with — a
+    * MinHash or IVF index at `indexPath` fails loudly, not with a bare
+    * missing-key error. */
+  private def storedBuckets(spark: SparkSession, indexPath: String): Long =
+    IndexControl.param(Dedup.readIndexParams(spark, indexPath), indexPath, "n_buckets")
 
   /** Append a doc batch to a [[buildPostingIndex]] index. `batchId`
     * keys the write: a retry of the same batch overwrites its own
@@ -156,7 +162,7 @@ object Retrieval {
                            indexPath: String, batchId: Long): Unit = {
     require(batchId >= 0, s"append batchId must be >= 0 (build owns -1): $batchId")
     val spark = docs.sparkSession
-    val nBuckets = Dedup.readIndexParams(spark, indexPath)("n_buckets").toInt
+    val nBuckets = storedBuckets(spark, indexPath).toInt
     val (postings, termDf, stats) = bucketed(docs, idCol, textCol, nBuckets)
     // one root-manifest commit for the whole triple (enabled indexes);
     // redelivered committed batch ids are a no-op
@@ -172,7 +178,7 @@ object Retrieval {
   def bm25TopKIndexed(spark: SparkSession, indexPath: String, idCol: String,
                       queryTerms: Seq[String], k: Int,
                       k1: Double = 1.2, b: Double = 0.75): DataFrame = {
-    val nBuckets = Dedup.readIndexParams(spark, indexPath)("n_buckets")
+    val nBuckets = storedBuckets(spark, indexPath)
     val terms = queryTerms.map(_.toLowerCase).distinct
     // the build bucketed with Spark's xxhash64 — derive the probe
     // buckets with the same engine hash (tiny driver-bounded job)

@@ -232,8 +232,7 @@ object OsmQueries {
   private val zLayouts = scala.collection.concurrent.TrieMap.empty[String, String]
   def zLayout(s: SparkSession, dir: String): String =
     zLayouts.getOrElseUpdate(dir, {
-      val out = graft.TempDirs.path(
-        s"osm-out/events_zorder/${dir.replaceAll("[^a-zA-Z0-9.]", "_")}")
+      val out = graft.TempDirs.forSf("osm-out/events_zorder", dir)
       graft.operators.ZOrder.writeZOrdered(
         withSyntheticLatLon(t(s, dir, "events")), "lat", "lon",
         aLo = 46.0, aHi = 49.0, bLo = -120.0, bHi = -116.0,

@@ -775,7 +775,7 @@ object PipelineQueries {
       val streamDir = {
         import java.nio.file.{Files, Paths}
         val d = Paths.get(
-          graft.TempDirs.path(s"st13-src/${dir.replaceAll("[^a-zA-Z0-9.]", "_")}"))
+          graft.TempDirs.forSf("st13-src", dir))
         Files.createDirectories(d)
         val link = d.resolve("events.parquet")
         if (!Files.exists(link))
@@ -2109,8 +2109,7 @@ object PipelineQueries {
     // batches). Same oracle as ret1: the index path must be score-
     // identical to the on-the-fly path.
     "ret3_bm25_indexed" -> ((s, dir) => {
-      val idx = graft.TempDirs.path(
-        s"posting-index/q-${dir.replaceAll("[^a-zA-Z0-9.]", "_")}")
+      val idx = graft.TempDirs.forSf("posting-index/q", dir)
       Retrieval.buildPostingIndex(t(s, dir, "documents"), "doc_id", "text",
         idx, nBuckets = 16)
       Retrieval.bm25TopKIndexed(s, idx, "doc_id",
@@ -2131,8 +2130,7 @@ object PipelineQueries {
     // flipped together, which is the point of the root manifest.
     "ret4_snapshot_index" -> ((s, dir) => {
       import graft.operators.{Retention, Snapshot}
-      val idx = graft.TempDirs.path(
-        s"posting-index/ret4-${dir.replaceAll("[^a-zA-Z0-9.]", "_")}")
+      val idx = graft.TempDirs.forSf("posting-index/ret4", dir)
       val docs = t(s, dir, "documents")
       val even = docs.filter(col("doc_id") % 2 === 0)
       val odd = docs.filter(col("doc_id") % 2 === 1)

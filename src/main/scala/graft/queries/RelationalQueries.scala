@@ -565,7 +565,7 @@ object RelationalQueries {
         // keyed by the sanitized full path (not hashCode — a collision
         // between two sf dirs would silently stream the wrong table)
         val d = Paths.get(
-          graft.TempDirs.path(s"st4-src/${dir.replaceAll("[^a-zA-Z0-9.]", "_")}"))
+          graft.TempDirs.forSf("st4-src", dir))
         Files.createDirectories(d)
         val link = d.resolve("events.parquet")
         if (!Files.exists(link))
@@ -602,7 +602,7 @@ object RelationalQueries {
       val streamDir = {
         import java.nio.file.{Files, Paths}
         val d = Paths.get(
-          graft.TempDirs.path(s"st6-src/${dir.replaceAll("[^a-zA-Z0-9.]", "_")}"))
+          graft.TempDirs.forSf("st6-src", dir))
         Files.createDirectories(d)
         val link = d.resolve("events.parquet")
         if (!Files.exists(link))
@@ -658,7 +658,7 @@ object RelationalQueries {
         import java.nio.file.{Files, Paths}
         import scala.jdk.CollectionConverters._
         val d = Paths.get(
-          graft.TempDirs.path(s"st7-src/${dir.replaceAll("[^a-zA-Z0-9.]", "_")}"))
+          graft.TempDirs.forSf("st7-src", dir))
         if (!Files.exists(d.resolve("_SUCCESS"))) {
           graft.Tables(s, dir, "events")
             .repartitionByRange(8, col("ts"))
@@ -882,8 +882,7 @@ object RelationalQueries {
     // persistable/mergeable one, where history is never re-scanned.
     "a14_quantile_sketch_table" -> ((s, dir) => {
       val li = t(s, dir, "lineitem")
-      val path = graft.TempDirs.path(
-        s"kll/a14/${dir.replaceAll("[^a-zA-Z0-9.]", "_")}")
+      val path = graft.TempDirs.forSf("kll/a14", dir)
       def half(p: Long) = li.filter(pmod(col("l_partkey"), lit(2)) === p)
         .groupBy(col("l_returnflag").as("key"))
         .agg(expr("kll_sketch_agg_double(CAST(l_quantity AS DOUBLE))").as("sketch"))
@@ -968,8 +967,7 @@ object RelationalQueries {
     "a18_cms_table" -> ((s, dir) => {
       import graft.operators.CountMinTable
       val ev = t(s, dir, "events")
-      val path = graft.TempDirs.path(
-        s"cms-table/a18/${dir.replaceAll("[^a-zA-Z0-9.]", "_")}")
+      val path = graft.TempDirs.forSf("cms-table/a18", dir)
       val even = ev.filter(col("event_id") % 2 === 0)
       val odd = ev.filter(col("event_id") % 2 === 1)
       CountMinTable.build(even, "event_type", "user_id", path)
@@ -1015,8 +1013,7 @@ object RelationalQueries {
       val weeks = ev.withColumn("week",
         floor(datediff(col("day"), lit(minDay)) / 7).cast("long"))
       val nWeeks = weeks.agg(max(col("week"))).head().getLong(0).toInt + 1
-      val path = graft.TempDirs.path(
-        s"sketch-table/a17/${dir.replaceAll("[^a-zA-Z0-9.]", "_")}")
+      val path = graft.TempDirs.forSf("sketch-table/a17", dir)
       (0 until nWeeks).foreach { w =>
         val batch = weeks.filter(col("week") === w.toLong)
           .select(col("event_type"),
@@ -1154,8 +1151,7 @@ object RelationalQueries {
     "a13_sketch_table" -> ((s, dir) => {
       import graft.operators.SketchTable
       val ev = t(s, dir, "events")
-      val path = graft.TempDirs.path(
-        s"sketch-table/a13/${dir.replaceAll("[^a-zA-Z0-9.]", "_")}")
+      val path = graft.TempDirs.forSf("sketch-table/a13", dir)
       val even = ev.filter(col("event_id") % 2 === 0)
       val odd = ev.filter(col("event_id") % 2 === 1)
       SketchTable.build(even, "event_type", "user_id", path)
@@ -1316,8 +1312,7 @@ object RelationalQueries {
         cents(col("o_totalprice")).as("price_cents"), col("o_orderkey"))
       def part(m: Int) =
         ord.filter(col("o_orderkey") % 3 === m).drop("o_orderkey")
-      val path = graft.TempDirs.path(
-        s"matagg/ma1/${dir.replaceAll("[^a-zA-Z0-9.]", "_")}")
+      val path = graft.TempDirs.forSf("matagg/ma1", dir)
       MaterializedAgg.build(part(0), Seq("o_orderstatus"),
         Seq("price_cents"), path)
       MaterializedAgg.appendBatch(part(1), Seq("o_orderstatus"),
@@ -1581,8 +1576,7 @@ object RelationalQueries {
     // parquet); the re-read aggregate must match the parquet-derived
     // oracle bit-for-bit.
     "s10_orc_roundtrip" -> ((s, dir) => {
-      val out = graft.TempDirs.path(
-        s"orc/s10-${dir.replaceAll("[^a-zA-Z0-9.]", "_")}")
+      val out = graft.TempDirs.forSf("orc/s10", dir)
       t(s, dir, "documents").write.mode("overwrite").orc(out)
       s.read.orc(out)
         .groupBy(col("source"), col("lang"))
@@ -1596,8 +1590,7 @@ object RelationalQueries {
     // survive textually (shortest-round-trip rendering), pinned by the
     // exact cents sum.
     "s11_csv_roundtrip" -> ((s, dir) => {
-      val out = graft.TempDirs.path(
-        s"csv/s11-${dir.replaceAll("[^a-zA-Z0-9.]", "_")}")
+      val out = graft.TempDirs.forSf("csv/s11", dir)
       t(s, dir, "events").select("event_id", "event_type", "value")
         .write.mode("overwrite").option("header", "true").csv(out)
       s.read.schema("event_id LONG, event_type STRING, value DOUBLE")

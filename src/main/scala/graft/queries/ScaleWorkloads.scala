@@ -38,7 +38,7 @@ object ScaleWorkloads {
 
   def minhashIndexPath(s: SparkSession, dir: String): String =
     minhashIndexes.getOrElseUpdate(dir, {
-      val out = graft.TempDirs.path(s"minhash-index/sf-${dir.replaceAll("[^a-zA-Z0-9.]", "_")}")
+      val out = graft.TempDirs.forSf("minhash-index", dir)
       Dedup.buildMinhashIndex(
         Tables(s, dir, "documents").filter(col("doc_id") % 2 === 0),
         "doc_id", "text", out)
@@ -51,8 +51,7 @@ object ScaleWorkloads {
 
   def postingIndexPath(s: SparkSession, dir: String): String =
     postingIndexes.getOrElseUpdate(dir, {
-      val out = graft.TempDirs.path(
-        s"posting-index/sf-${dir.replaceAll("[^a-zA-Z0-9.]", "_")}")
+      val out = graft.TempDirs.forSf("posting-index", dir)
       graft.operators.Retrieval.buildPostingIndex(
         Tables(s, dir, "documents"), "doc_id", "text", out, nBuckets = 64)
       out
@@ -66,8 +65,7 @@ object ScaleWorkloads {
 
   def grownMinhashIndexPath(s: SparkSession, dir: String): String =
     grownIndexes.getOrElseUpdate(dir, {
-      val out = graft.TempDirs.path(
-        s"minhash-index/sf-grown-${dir.replaceAll("[^a-zA-Z0-9.]", "_")}")
+      val out = graft.TempDirs.forSf("minhash-index/grown", dir)
       val docs = Tables(s, dir, "documents")
       Dedup.buildMinhashIndex(docs.filter(col("doc_id") % 2 === 0),
         "doc_id", "text", out)
@@ -84,7 +82,7 @@ object ScaleWorkloads {
 
   def embeddingIndexPath(s: SparkSession, dir: String): String =
     embIndexes.getOrElseUpdate(dir, {
-      val out = graft.TempDirs.path(s"embedding-index/sf-${dir.replaceAll("[^a-zA-Z0-9.]", "_")}")
+      val out = graft.TempDirs.forSf("embedding-index", dir)
       Dedup.buildEmbeddingIndex(
         Tables(s, dir, "embeddings").filter(col("vec_id") % 2 === 0),
         "vec_id", "embedding", EmbDim, out)
@@ -96,8 +94,7 @@ object ScaleWorkloads {
   private val linLayouts = TrieMap.empty[String, String]
   private def linearLayout(s: SparkSession, dir: String): String =
     linLayouts.getOrElseUpdate(dir, {
-      val out = graft.TempDirs.path(
-        s"osm-out/events_linear/${dir.replaceAll("[^a-zA-Z0-9.]", "_")}")
+      val out = graft.TempDirs.forSf("osm-out/events_linear", dir)
       OsmQueries.withSyntheticLatLon(Tables(s, dir, "events"))
         .repartitionByRange(32, col("lat")).sortWithinPartitions("lat")
         .write.mode("overwrite").parquet(out)
@@ -110,7 +107,7 @@ object ScaleWorkloads {
 
   def indexPath(s: SparkSession, dir: String): String =
     ivfIndexes.getOrElseUpdate(dir, {
-      val out = graft.TempDirs.path(s"ann-index/sf-${dir.replaceAll("[^a-zA-Z0-9.]", "_")}")
+      val out = graft.TempDirs.forSf("ann-index", dir)
       Ann.buildIvfIndex(Tables(s, dir, "embeddings"), "vec_id", "embedding",
         EmbDim, nCells = 8, outPath = out)
       out
@@ -122,8 +119,7 @@ object ScaleWorkloads {
 
   def ivfPqIndexPath(s: SparkSession, dir: String): String =
     ivfPqIndexes.getOrElseUpdate(dir, {
-      val out = graft.TempDirs.path(
-        s"ivfpq-index/sf-${dir.replaceAll("[^a-zA-Z0-9.]", "_")}")
+      val out = graft.TempDirs.forSf("ivfpq-index", dir)
       Ann.buildIvfPqIndex(Tables(s, dir, "embeddings"), "vec_id", "embedding",
         EmbDim, nCells = 8, m = 8, kCodes = 256, outPath = out,
         iters = 3, lloydIters = 8)
@@ -1532,8 +1528,7 @@ object ScaleWorkloads {
     "sx51_compaction" -> ((s, dir) => {
       import graft.operators.Compaction
       val in = fragmentedEvents(s, dir)
-      val out = graft.TempDirs.path(
-        s"compaction-bench/out/${dir.replaceAll("[^a-zA-Z0-9.]", "_")}")
+      val out = graft.TempDirs.forSf("compaction-bench/out", dir)
       Compaction.compact(s, in, out, targetBytes = 8L << 20,
           partitionCols = Seq("event_type"))
         .agg(sum("files_before").as("files_before"),
@@ -1726,8 +1721,7 @@ object ScaleWorkloads {
         col("o_orderpriority"),
         (col("o_totalprice") * 100).cast("long").as("price_cents"),
         col("o_orderkey"))
-      val path = graft.TempDirs.path(
-        s"matagg-sx/${dir.replaceAll("[^a-zA-Z0-9.]", "_")}-${java.util.UUID.randomUUID()}")
+      val path = graft.TempDirs.forSf(s"matagg-sx/${java.util.UUID.randomUUID()}", dir)
       def slice(m: Int) = ord.filter(col("o_orderkey") % 4 === m)
         .drop("o_orderkey")
       val keys = Seq("o_orderstatus", "o_orderpriority")
@@ -1959,8 +1953,7 @@ object ScaleWorkloads {
   private val fragLayouts = TrieMap.empty[String, String]
   private def fragmentedEvents(s: SparkSession, dir: String): String =
     fragLayouts.getOrElseUpdate(dir, {
-      val out = graft.TempDirs.path(
-        s"compaction-bench/in/${dir.replaceAll("[^a-zA-Z0-9.]", "_")}")
+      val out = graft.TempDirs.forSf("compaction-bench/in", dir)
       Tables(s, dir, "events")
         .withColumn("_slice", pmod(col("event_id"), lit(64)))
         .repartition(64, col("_slice")).drop("_slice")

@@ -44,7 +44,7 @@ object AnnServe {
       s"shortlist $shortlist smaller than k=$k")
     val params = graft.operators.Dedup.readIndexParams(spark, indexPath)
     require(params.contains("pq_m") && params.contains("n_cells"),
-      s"params/ under $indexPath is not an IVF-PQ index record")
+      s"${graft.operators.IndexControl.FileName} under $indexPath is not an IVF-PQ index record")
     queries.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
       sink(graft.operators.Ann.searchIvfPqIndexBatch(batch.sparkSession,
         indexPath, idCol, vecCol, batch, qidCol, qvecCol, k,

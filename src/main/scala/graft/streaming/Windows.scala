@@ -174,7 +174,7 @@ object Windows {
     * exactly-once delivery matters downstream).
     *
     * The probe/append knobs (shingleK, numHashes, bands) are READ FROM
-    * the index's stored `params/` — an index built with tuned
+    * the index's stored `_index.json` — an index built with tuned
     * parameters streams as-is; only `threshold` (a verify-side filter,
     * not a key parameter) is the caller's choice. */
   def streamingDedupAgainstIndex(stream: DataFrame, idCol: String,
@@ -217,12 +217,13 @@ object Windows {
                                       onStats: Option[IngestBatchStats => Unit] = None)
                                      (sink: (DataFrame, Long) => Unit)
       : org.apache.spark.sql.streaming.StreamingQuery = {
-    import graft.operators.Dedup
+    import graft.operators.{Dedup, IndexControl}
     // one params read at stream start, not per batch — the per-batch
     // probe/append calls take the PRECHECKED variants (no per-call
     // params round-trips; the cap follows the index's stored knob)
     val p = Dedup.readIndexParams(stream.sparkSession, indexPath)
-    val (k, nh, bands) = (p("shingle_k").toInt, p("num_hashes").toInt, p("bands").toInt)
+    def knob(key: String) = IndexControl.param(p, indexPath, key).toInt
+    val (k, nh, bands) = (knob("shingle_k"), knob("num_hashes"), knob("bands"))
     val cap = p.getOrElse("max_bucket", 1000L).toInt
     stream.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
       val cached = batch.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -405,7 +406,7 @@ object Windows {
     * single-index loop), and hands (survivors, batchId) to the sink.
     *
     * Both probe/append parameter sets are read from the respective
-    * index's stored `params/` once at stream start; only the verify
+    * index's stored `_index.json` once at stream start; only the verify
     * thresholds are the caller's choice. The embedding index's `dim`
     * is the stored build dim. `compactEvery = Some(n)` compacts the
     * maintained indexes after every n-th batch (see
@@ -426,13 +427,15 @@ object Windows {
                                    ivfIndexPath: Option[String] = None)
                                   (sink: (DataFrame, Long) => Unit)
       : org.apache.spark.sql.streaming.StreamingQuery = {
-    import graft.operators.Dedup
+    import graft.operators.{Dedup, IndexControl}
     val spark = stream.sparkSession
     val tp = Dedup.readIndexParams(spark, textIndexPath)
-    val (k, nh, bands) = (tp("shingle_k").toInt, tp("num_hashes").toInt, tp("bands").toInt)
+    def tknob(key: String) = IndexControl.param(tp, textIndexPath, key).toInt
+    val (k, nh, bands) = (tknob("shingle_k"), tknob("num_hashes"), tknob("bands"))
     val tcap = tp.getOrElse("max_bucket", 1000L).toInt
     val ep = Dedup.readIndexParams(spark, embIndexPath)
-    val (bits, tables, dim) = (ep("bits").toInt, ep("tables").toInt, ep("dim").toInt)
+    def eknob(key: String) = IndexControl.param(ep, embIndexPath, key).toInt
+    val (bits, tables, dim) = (eknob("bits"), eknob("tables"), eknob("dim"))
     val ecap = ep.getOrElse("max_bucket", 1000L).toInt
     stream.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
       val sc = batch.sparkSession.sparkContext

@@ -157,7 +157,7 @@ class AnnSpec extends SparkSpec {
     got.foreach { case (id, s) => s shouldBe exactSims(id) +- 1e-9 }
   }
 
-  test("persisted IVF index: params/ is the commit marker and gates search") {
+  test("persisted IVF index: _index.json is the commit marker and gates search") {
     import spark.implicits._
     val all = graft.queries.PlantedFixtures.embs(spark)
     val dimF = graft.queries.PlantedFixtures.EmbFixtureDim
@@ -173,16 +173,35 @@ class AnnSpec extends SparkSpec {
       Ann.searchIvfIndex(spark, idx, "vec_id", "embedding", qv :+ 0.0, k = 3)
     }
     exDim.getMessage should include("dim")
-    // half-built index (vectors/centroids readable, marker absent —
-    // the state a crash before the final params/ write leaves): the
-    // search must fail loudly, matching requireIndexParams semantics
-    val marker = new java.io.File(s"$idx/params")
-    marker.listFiles().foreach(_.delete())
-    marker.delete() shouldBe true
+    // half-built index (vectors readable, marker absent — the state a
+    // crash before the final _index.json write leaves): the search
+    // must fail loudly, matching requireIndexParams semantics
+    new java.io.File(s"$idx/_index.json").delete() shouldBe true
     val exHalf = intercept[IllegalStateException] {
       Ann.searchIvfIndex(spark, idx, "vec_id", "embedding", qv, k = 3)
     }
-    exHalf.getMessage should include("no readable params/")
+    exHalf.getMessage should include("no readable _index.json")
+  }
+
+  test("maintainIvfIndex: retrain_version steps by exactly 1, centroids land with it, no scratch left") {
+    val all = graft.queries.PlantedFixtures.embs(spark)
+    val dimF = graft.queries.PlantedFixtures.EmbFixtureDim
+    val idx = graft.TempDirs.path(s"ann-index/maintain-${java.util.UUID.randomUUID()}")
+    Ann.buildIvfIndex(all, "vec_id", "embedding", dimF, nCells = 3, outPath = idx)
+    def version = graft.operators.Dedup.readIndexParams(spark, idx)
+      .getOrElse("retrain_version", 0L)
+    for (_ <- 1 to 2) {
+      val before = version
+      Ann.maintainIvfIndex(spark, idx, "vec_id", "embedding", iters = 2)
+      version shouldBe before + 1
+      new java.io.File(idx).list().toSet should contain noneOf (
+        "_maintain_tmp", "centroids", "params")
+    }
+    graft.operators.IndexControl.read(spark, idx).centroids.map(_.length) shouldBe Some(3)
+    val qv = all.filter(col("vec_id") === 0).select(col("embedding"))
+      .collect()(0).getSeq[Float](0).map(_.toDouble).toSeq
+    Ann.searchIvfIndex(spark, idx, "vec_id", "embedding", qv, k = 3)
+      .count() shouldBe 3L
   }
 
   test("batched top-k: one scan serves many queries, matching the single-query ops", Slow) {
@@ -347,9 +366,7 @@ class AnnSpec extends SparkSpec {
       .filter(f => f.isDirectory && f.getName.startsWith("_cell="))
       .foreach(d => d.listFiles.count(_.getName.endsWith(".parquet")) shouldBe 1)
     // appending to a marker-less (mid-rebuild) index fails loudly
-    val marker = new java.io.File(s"$idx/params")
-    marker.listFiles().foreach(_.delete())
-    marker.delete() shouldBe true
+    new java.io.File(s"$idx/_index.json").delete() shouldBe true
     intercept[IllegalStateException] {
       Ann.appendToIvfIndex(all.filter(col("vec_id") === 1L),
         "vec_id", "embedding", idx, batchId = Some(9L))

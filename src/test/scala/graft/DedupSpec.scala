@@ -682,17 +682,15 @@ class DedupSpec extends SparkSpec {
     val docs = Seq(1L -> base).toDF("doc_id", "text")
     Dedup.buildMinhashIndex(docs, "doc_id", "text", idx)
     // simulate a compaction rebuild crashing after the marker clear but
-    // before completion: buildMinhashIndex deletes params/ FIRST, so at
-    // every point before the final marker re-write the index reads as
+    // before completion: buildMinhashIndex deletes _index.json FIRST, so
+    // at every point before the final marker re-write the index reads as
     // not-committed instead of mixed old/new. Reproduce that state by
     // removing the marker the same way the rebuild's first step does.
-    val markerDir = new java.io.File(s"$idx/params")
-    markerDir.listFiles().foreach(_.delete())
-    markerDir.delete() shouldBe true
+    new java.io.File(s"$idx/_index.json").delete() shouldBe true
     val ex = intercept[IllegalStateException] {
       Dedup.minhashNearDupsAgainstIndex(docs, "doc_id", "text", idx)
     }
-    ex.getMessage should include("no readable params/")
+    ex.getMessage should include("no readable _index.json")
   }
 
   test("null-text docs drop from MinHash banding instead of colliding in one bucket") {

@@ -86,10 +86,24 @@ class RetrievalSpec extends SparkSpec {
   test("a half-built posting index (no params commit marker) fails loudly") {
     val idx = graft.TempDirs.path("posting-index/spec-halfbuilt")
     Retrieval.buildPostingIndex(fixture, "doc_id", "text", idx, nBuckets = 4)
-    val p = new org.apache.hadoop.fs.Path(s"$idx/params")
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
+    val p = new org.apache.hadoop.fs.Path(s"$idx/_index.json")
+    p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, false) shouldBe true
     an[IllegalStateException] should be thrownBy
       Retrieval.bm25TopKIndexed(spark, idx, "doc_id", Seq("apple"), 5).collect()
+  }
+
+  test("a MinHash index path fails the posting-index calls with the layout error") {
+    val idx = graft.TempDirs.path(s"posting-index/spec-wrongtype-${java.util.UUID.randomUUID()}")
+    graft.operators.Dedup.buildMinhashIndex(fixture, "doc_id", "text", idx)
+    val probe = intercept[IllegalStateException] {
+      Retrieval.bm25TopKIndexed(spark, idx, "doc_id", Seq("apple"), 5)
+    }
+    probe.getMessage should include("has no field n_buckets")
+    probe.getMessage should include(idx)
+    val append = intercept[IllegalStateException] {
+      Retrieval.appendToPostingIndex(fixture, "doc_id", "text", idx, batchId = 0)
+    }
+    append.getMessage should include("has no field n_buckets")
   }
 
   test("rrfFuse: exact rank arithmetic, absent lists contribute 0, id tie-break") {

@@ -1235,7 +1235,7 @@ class StreamingSpec extends SparkSpec {
     implicit val sqlCtx = spark.sqlContext
     import org.apache.spark.sql.functions.col
     // index built with NON-default key knobs: the stream must read them
-    // from params/ and keep working (r6 hardcoded the defaults and
+    // from _index.json and keep working (r6 hardcoded the defaults and
     // failed requireIndexParams on any tuned index)
     val idx = graft.TempDirs.path("minhash-index/streaming-tuned")
     val base = "the quick brown fox jumps over the lazy dog tonight again and again"

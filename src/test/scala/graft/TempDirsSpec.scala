@@ -34,4 +34,14 @@ class TempDirsSpec extends AnyFunSuite with Matchers {
     java.nio.file.Files.isDirectory(d) shouldBe true
     d.startsWith(root) shouldBe true
   }
+
+  test("per-sfDir scratch leaves are never hidden from Spark") {
+    for (sfDir <- Seq("/root/testdata/sf0.01", ".hidden/sf0.1", "_x", "sf0.001")) {
+      val leaf = new java.io.File(TempDirs.forSf("kll/a14", sfDir)).getName
+      leaf should startWith("sf-")
+      TempDirs.forSf("kll/a14", sfDir) should startWith(s"${TempDirs.root}/kll/a14/")
+    }
+    // distinct sfDirs keep distinct paths
+    TempDirs.forSf("a", "/d/sf0.01") should not be TempDirs.forSf("a", "/d/sf0.1")
+  }
 }
