@@ -60,6 +60,12 @@ object Bench {
   val GaugeBudget: FiniteDuration =
     sys.env.get("SPARK_GRAFT_GAUGE_BUDGET_S").map(_.toInt.seconds).getOrElse(45.seconds)
 
+  /** The `SPARK_GRAFT_BENCH_ONLY` filter: a comma-separated list of
+    * name prefixes that selects both the timed queries and the gauge
+    * groups; unset selects everything. */
+  def selected(only: Option[String])(name: String): Boolean =
+    only.forall(_.split(",").exists(name.startsWith))
+
   /** Run each named gauge group under its own job group + deadline,
     * ACCUMULATING into one map: a group that times out records
     * `gauge_<name>_error` = -2 (and its in-flight jobs are cancelled,
@@ -253,7 +259,7 @@ object Bench {
     val canonicalAqe = spark.conf.get("spark.sql.adaptive.enabled")
 
     // Optional name filter (dev loop): SPARK_GRAFT_BENCH_ONLY=dd3,dd5
-    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY").map(_.split(",").toSet)
+    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
     val runStartNanos = System.nanoTime()
 
     // Reset cross-query Spark state so query N's measurement cannot
@@ -274,7 +280,7 @@ object Bench {
     val evidence = scala.collection.mutable.LinkedHashMap.empty[String, Evidence]
     val results = (SparkEntry.queries ++ graft.queries.ScaleWorkloads.defs)
       .toSeq.sortBy(_._1)
-      .filter { case (n, _) => only.forall(_.exists(n.startsWith)) }
+      .filter { case (n, _) => selected(only)(n) }
       .map { case (name, fn) =>
       // SPARK_GRAFT_EXPLAIN=<names>: dump the formatted plan before
       // timing (dev loop for plan-shape iteration).
@@ -444,7 +450,8 @@ object Bench {
       // main AFTER every timed query ran and lose the round's whole
       // JSON line (the BENCH_r02 failure shape; review r17)
       try runGauges(sc,
-        graft.queries.ScaleWorkloads.gaugeDefs(spark, sfDir), GaugeBudget,
+        graft.queries.ScaleWorkloads.gaugeDefs(spark, sfDir)
+          .filter { case (g, _) => selected(only)(g) }, GaugeBudget,
         // st5_overhead EXECUTES the full two-modality ingest loop once
         // under a listener (~35 s cold on a warm-cache box, more when
         // the bench has been hammering the JVM for 20 minutes) — the

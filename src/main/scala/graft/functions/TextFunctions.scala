@@ -75,15 +75,6 @@ object TextFunctions {
       .when(key.rlike("^([a-z]|_)*$"), "lower")
       .otherwise("other")
 
-  /** Merged-field splitter for dirty postcodes like "Spokane, WA 99218"
-    * (readme.md:43-52,94-103): named-group regex → (city, state, postcode).
-    * Returns the three captures; empty string when a group is absent.
-    */
-  private val mergedPat = "(\\w+)?,? ?([A-Z][A-Z]) (\\d{5})"
-  def mergedCity(c: Column): Column = regexp_extract(c, mergedPat, 1)
-  def mergedState(c: Column): Column = regexp_extract(c, mergedPat, 2)
-  def mergedPostcode(c: Column): Column = regexp_extract(c, mergedPat, 3)
-
   // ---------------------------------------------------------------------
   // Part 2 — training-data pipeline text analysis
   // ---------------------------------------------------------------------

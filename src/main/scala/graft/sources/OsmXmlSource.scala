@@ -9,15 +9,16 @@ import org.apache.hadoop.fs.{FileStatus, Path => HPath}
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{Encoders, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.sql.catalyst.util.{ArrayBasedMapData, DateTimeUtils, GenericArrayData}
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader,
   PartitionReaderFactory, Scan, ScanBuilder, SupportsPushDownRequiredColumns}
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
+import org.apache.spark.unsafe.types.UTF8String
 import org.apache.spark.util.SerializableConfiguration
 
 /** DataSourceV2 TableProvider for OSM XML — the one ingest path
@@ -46,11 +47,14 @@ import org.apache.spark.util.SerializableConfiguration
   * (SupportsPushDownRequiredColumns): XML parse cost is unavoidable —
   * every byte is scanned regardless — but the rows handed to Spark
   * carry only the projected columns, so a `select(id, amenity)` over a
-  * planet-scale scan serializes 2 fields per element instead of 14
-  * (the encoder's full-row shaping of tags maps / member arrays /
-  * created structs is the measurable part of post-parse cost). Nested
-  * pruning is left to Catalyst's Project above the scan — the pruned
-  * read schema keeps each requested top-level field's full type.
+  * planet-scale scan builds 2 fields per element instead of 14. The
+  * reader builds each `InternalRow` itself from the parsed element
+  * ([[OsmXmlSource.columns]]: `UTF8String`s, nested
+  * `GenericInternalRow`s, `GenericArrayData`, `ArrayBasedMapData`), so
+  * no encoder serializer is built per task and no row is copied; the
+  * values equal the `OsmElement` encoder's (OsmSourceSpec pins it).
+  * Nested pruning is left to Catalyst's Project above the scan — the
+  * pruned read schema keeps each requested top-level field's full type.
   * Filter pushdown stays unimplemented: there is no sub-file statistic
   * to skip by; filtering happens one hop later at the parquet landing
   * table.
@@ -65,11 +69,52 @@ class OsmXmlSource extends TableProvider {
 }
 
 object OsmXmlSource {
-  val schema: StructType = Encoders.product[OsmSource.OsmElement].schema
+  import OsmSource.OsmElement
 
-  private[sources] def encoder: ExpressionEncoder[OsmSource.OsmElement] =
-    ExpressionEncoder(Encoders.product[OsmSource.OsmElement]
-      .asInstanceOf[org.apache.spark.sql.catalyst.encoders.AgnosticEncoder[OsmSource.OsmElement]])
+  val schema: StructType = Encoders.product[OsmElement].schema
+
+  private def str(s: String): UTF8String = UTF8String.fromString(s) // null stays null
+
+  private def struct(values: Any*): InternalRow = new GenericInternalRow(values.toArray)
+
+  private def array[A](xs: Seq[A])(f: A => Any): GenericArrayData =
+    if (xs == null) null else new GenericArrayData(xs.iterator.map(f).toArray)
+
+  /** Each top-level column's Catalyst value of an element, keyed by
+    * field name; [[schema]] fixes the types. Map entries keep the
+    * element map's iteration order, as the encoder's do. */
+  private[sources] val columns: Map[String, OsmElement => Any] = Map(
+    "id" -> (e => str(e.id)),
+    "type" -> (e => str(e.`type`)),
+    "visible" -> (e => str(e.visible)),
+    "pos" -> (e => if (e.pos == null) null else struct(e.pos.lat, e.pos.lon)),
+    "created" -> { e =>
+      val c = e.created
+      if (c == null) null
+      else struct(str(c.version), str(c.changeset),
+        if (c.timestamp == null) null else DateTimeUtils.fromJavaTimestamp(c.timestamp),
+        str(c.user), str(c.uid))
+    },
+    "address" -> { e =>
+      val a = e.address
+      if (a == null) null
+      else struct(str(a.street), str(a.housenumber), str(a.postcode), str(a.city), str(a.state))
+    },
+    "node_refs" -> (e => array(e.node_refs)(str)),
+    "members" -> (e => array(e.members)(m => struct(str(m.member_type), str(m.ref), str(m.role)))),
+    "tags" -> { e =>
+      if (e.tags == null) null
+      else {
+        val (keys, values) = e.tags.toArray.unzip
+        new ArrayBasedMapData(new GenericArrayData(keys.map(str)),
+          new GenericArrayData(values.map(str)))
+      }
+    },
+    "amenity" -> (e => str(e.amenity)),
+    "natural" -> (e => str(e.natural)),
+    "place" -> (e => str(e.place)),
+    "name" -> (e => str(e.name)),
+    "population" -> (e => str(e.population)))
 }
 
 private[sources] class OsmXmlTable(options: CaseInsensitiveStringMap)
@@ -164,8 +209,7 @@ private[sources] class OsmScanBuilder(options: CaseInsensitiveStringMap)
     * Spark's own file scans. */
   override def createReaderFactory(): PartitionReaderFactory = {
     val sc = spark.sparkContext
-    new OsmReaderFactory(requiredFields.map(OsmXmlSource.schema.fieldIndex),
-      cleanStreets, includeRelations,
+    new OsmReaderFactory(requiredFields, cleanStreets, includeRelations,
       sc.broadcast(new SerializableConfiguration(sc.hadoopConfiguration)))
   }
 }
@@ -173,28 +217,23 @@ private[sources] class OsmScanBuilder(options: CaseInsensitiveStringMap)
 private[sources] case class OsmRangePartition(path: String, start: Long, end: Long)
     extends InputPartition
 
-private[sources] class OsmReaderFactory(requiredIndices: Array[Int],
+private[sources] class OsmReaderFactory(requiredFields: Array[String],
                                         cleanStreets: Boolean,
                                         includeRelations: Boolean,
                                         conf: Broadcast[SerializableConfiguration])
     extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
     val p = partition.asInstanceOf[OsmRangePartition]
-    val full = OsmXmlSource.schema
-    val pruneAll = requiredIndices.length == full.length
+    val columns = requiredFields.map(OsmXmlSource.columns)
     new PartitionReader[InternalRow] {
       private val iter = OsmSource.parseRange(p.path, p.start, p.end,
         cleanStreets, includeRelations, conf.value.value)
-      private val toRow = OsmXmlSource.encoder.createSerializer()
       private var current: InternalRow = _
       override def next(): Boolean = {
         if (!iter.hasNext) return false
-        // the serializer reuses its buffer; DSv2 consumers may hold rows
-        val row = toRow(iter.next()).copy()
-        current =
-          if (pruneAll) row
-          else new GenericInternalRow(requiredIndices.map(i =>
-            row.get(i, full(i).dataType)): Array[Any])
+        val e = iter.next()
+        // a fresh row per element: DSv2 consumers may hold rows
+        current = new GenericInternalRow(columns.map(_(e)))
         true
       }
       override def get(): InternalRow = current

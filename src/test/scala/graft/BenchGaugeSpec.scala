@@ -57,6 +57,19 @@ class BenchGaugeSpec extends SparkSpec {
       .subsetOf(names) shouldBe true
   }
 
+  test("SPARK_GRAFT_BENCH_ONLY selects gauge groups by the same prefixes as " +
+    "queries; unset runs every group") {
+    val names = graft.queries.ScaleWorkloads.gaugeDefs(spark, sf).map(_._1)
+    def kept(only: Option[String]) = names.filter(Bench.selected(only)).toSet
+    kept(None) shouldBe names.toSet
+    kept(Some("ivf,lsh")) shouldBe Set("ivf", "ivfpq", "ivfpq_nprobe", "lsh")
+    // a query-only filter (the index-workload A/B) runs no gauge group
+    kept(Some("ann,dd,ret,hn,st12,sx14")) shouldBe empty
+    kept(Some("st5")) shouldBe Set("st5_overhead")
+    Bench.selected(Some("dd3,ann"))("dd3_minhash_lsh") shouldBe true
+    Bench.selected(Some("dd3,ann"))("dd4_other") shouldBe false
+  }
+
   test("sustained-contention heal decision: a planted steadily-loaded " +
     "window holds zero clean reps until quiet reps land (r21, VERDICT #4)") {
     // the r20 dd12 shape: every rep valid, every rep under the hard

@@ -1,6 +1,8 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import org.scalacheck.Gen
+import org.scalacheck.rng.Seed
 import graft.sources.OsmSource
 
 /** S1-S3 golden tests, reproducing every assert from the reference's
@@ -140,49 +142,60 @@ class OsmSourceSpec extends SparkSpec {
     split shouldBe whole
   }
 
+  // -------------------------------------------------------------------
+  // A generator of whole OSM documents, for the DSv2 reader properties
+  // -------------------------------------------------------------------
+
+  // attribute text: 2-, 3- and 4-byte UTF-8 sequences, so range edges
+  // land inside characters, plus escaped markup the aligner must skip
+  private val text = Gen.choose(0, 6).flatMap(n => Gen.listOfN(n,
+    Gen.oneOf("a", "Z", " ", "é", "ß", "√", "日本", "🗺", "&amp;", "&lt;node ", "&quot;")))
+    .map(_.mkString)
+  private val tag = for {
+    k <- Gen.oneOf("name", "amenity", "note", "natural", "place", "population",
+      "addr:street", "addr:postcode", "addr:city", "addr:street:name")
+    v <- text
+  } yield s"""<tag k="$k" v="$v"/>"""
+  private val tagLines = Gen.choose(0, 4).flatMap(Gen.listOfN(_, tag))
+  private val ref = Gen.choose(1L, 99L).map(r => s"""ref="$r"""")
+  // (type, extra attributes, children); ids are assigned in order below
+  private val node = for {
+    lat <- Gen.choose(-90.0, 90.0); lon <- Gen.choose(-180.0, 180.0); ts <- tagLines
+  } yield ("node", s"""lat="$lat" lon="$lon"""", ts)
+  private val way = for {
+    nds <- Gen.choose(0, 5).flatMap(Gen.listOfN(_, ref.map(r => s"<nd $r/>"))); ts <- tagLines
+  } yield ("way", "", nds ++ ts)
+  private val relation = for {
+    ms <- Gen.choose(0, 3).flatMap(Gen.listOfN(_, for {
+      t <- Gen.oneOf("node", "way"); r <- ref; role <- text
+    } yield s"""<member type="$t" $r role="$role"/>"""))
+    ts <- tagLines
+  } yield ("relation", "", ms ++ ts)
+  // the created attributes, with a timestamp anywhere in 1970-2037
+  // (sub-second digits included); one element in six has none
+  private val created = Gen.frequency(1 -> Gen.const(""), 5 -> (for {
+    user <- text; secs <- Gen.choose(0L, 2100000000L); millis <- Gen.choose(0, 999)
+  } yield {
+    val ts = java.time.Instant.ofEpochSecond(secs).plusMillis(millis.toLong)
+    s"""version="1" changeset="7" timestamp="$ts" user="$user" uid="3" """
+  }))
+  private val osmDoc = for {
+    els <- Gen.choose(0, 30).flatMap(Gen.listOfN(_, Gen.frequency(5 -> node, 2 -> way, 1 -> relation)))
+    attrs <- Gen.listOfN(els.size, created)
+    seps <- Gen.listOfN(els.size, Gen.oneOf("", " ", "\n ", "\n\n  "))
+  } yield {
+    val body = els.zip(attrs).zip(seps).zipWithIndex.map { case ((((t, extra, kids), attr), sep), i) =>
+      val open = s"""<$t id="${i + 1}" $attr$extra"""
+      sep + (if (kids.isEmpty) s"$open/>" else kids.mkString(s"$open>\n  ", "\n  ", s"\n</$t>"))
+    }
+    "<?xml version=\"1.0\" encoding=\"UTF-8\"?>\n<osm version=\"0.6\">\n" +
+      """ <bounds minlat="1" minlon="2" maxlat="3" maxlon="4"/>""" + body.mkString + "\n</osm>\n"
+  }
+
   test("DSv2 source property: range reads equal the whole-document parse") {
     import spark.implicits._
-    import org.scalacheck.Gen
-    import org.scalacheck.rng.Seed
-    // attribute text: 2-, 3- and 4-byte UTF-8 sequences, so range edges
-    // land inside characters, plus escaped markup the aligner must skip
-    val text = Gen.choose(0, 6).flatMap(n => Gen.listOfN(n,
-      Gen.oneOf("a", "Z", " ", "é", "ß", "√", "日本", "🗺", "&amp;", "&lt;node ", "&quot;")))
-      .map(_.mkString)
-    val tag = for {
-      k <- Gen.oneOf("name", "amenity", "note", "addr:street", "addr:postcode", "addr:street:name")
-      v <- text
-    } yield s"""<tag k="$k" v="$v"/>"""
-    val tags = Gen.choose(0, 4).flatMap(Gen.listOfN(_, tag))
-    val ref = Gen.choose(1L, 99L).map(r => s"""ref="$r"""")
-    // (type, extra attributes, children); ids are assigned in order below
-    val node = for {
-      lat <- Gen.choose(-90.0, 90.0); lon <- Gen.choose(-180.0, 180.0); ts <- tags
-    } yield ("node", s"""lat="$lat" lon="$lon"""", ts)
-    val way = for {
-      nds <- Gen.choose(0, 5).flatMap(Gen.listOfN(_, ref.map(r => s"<nd $r/>"))); ts <- tags
-    } yield ("way", "", nds ++ ts)
-    val relation = for {
-      ms <- Gen.choose(0, 3).flatMap(Gen.listOfN(_, for {
-        t <- Gen.oneOf("node", "way"); r <- ref; role <- text
-      } yield s"""<member type="$t" $r role="$role"/>"""))
-      ts <- tags
-    } yield ("relation", "", ms ++ ts)
-    val doc = for {
-      els <- Gen.choose(0, 30).flatMap(Gen.listOfN(_, Gen.frequency(5 -> node, 2 -> way, 1 -> relation)))
-      users <- Gen.listOfN(els.size, text)
-      seps <- Gen.listOfN(els.size, Gen.oneOf("", " ", "\n ", "\n\n  "))
-    } yield {
-      val body = els.zip(users).zip(seps).zipWithIndex.map { case ((((t, extra, kids), user), sep), i) =>
-        val open = s"""<$t id="${i + 1}" version="1" changeset="7" """ +
-          s"""timestamp="2013-01-01T00:00:00Z" user="$user" uid="3" $extra"""
-        sep + (if (kids.isEmpty) s"$open/>" else kids.mkString(s"$open>\n  ", "\n  ", s"\n</$t>"))
-      }
-      "<?xml version=\"1.0\" encoding=\"UTF-8\"?>\n<osm version=\"0.6\">\n" +
-        """ <bounds minlat="1" minlon="2" maxlat="3" maxlon="4"/>""" + body.mkString + "\n</osm>\n"
-    }
     val params = for {
-      xml <- doc; anySize <- Gen.choose(64, 4096)
+      xml <- osmDoc; anySize <- Gen.choose(64, 4096)
       onStart <- Gen.oneOf(true, false); pick <- Gen.choose(0, 1000)
       cleanStreets <- Gen.oneOf(true, false); includeRelations <- Gen.oneOf(true, false)
     } yield {
@@ -207,6 +220,47 @@ class OsmSourceSpec extends SparkSpec {
       val want = OsmSource.parseElements(xml, cleanStreets, includeRelations).toSeq
       withClue(s"seed $i, splitBytes $splitBytes, ${xml.length} chars: ") {
         got.sortBy(e => (e.`type`, e.id)) shouldBe want.sortBy(e => (e.`type`, e.id))
+      }
+    }
+  }
+
+  test("DSv2 reader rows equal the OsmElement encoder's, in full and on pruned columns") {
+    import org.apache.spark.sql.Encoders
+    import org.apache.spark.sql.catalyst.encoders.{AgnosticEncoder, ExpressionEncoder}
+    import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, UnsafeProjection}
+    import org.apache.spark.sql.types.StructType
+    val full = graft.sources.OsmXmlSource.schema
+    val serialize = ExpressionEncoder(Encoders.product[OsmSource.OsmElement]
+      .asInstanceOf[AgnosticEncoder[OsmSource.OsmElement]]).createSerializer()
+    val params = for {
+      xml <- osmDoc; splitBytes <- Gen.choose(64, 4096)
+      cleanStreets <- Gen.oneOf(true, false); includeRelations <- Gen.oneOf(true, false)
+      n <- Gen.choose(1, full.length); picked <- Gen.pick(n, full.fieldNames.toSeq)
+      shuffled <- Gen.choose(0, 1)
+    } yield (xml, splitBytes, cleanStreets, includeRelations,
+      if (shuffled == 0) picked.toSeq else full.fieldNames.filter(picked.toSet).toSeq)
+    for (i <- 0 until 16) {
+      val (xml, splitBytes, cleanStreets, includeRelations, picked) =
+        params(Gen.Parameters.default, Seed(100L + i)).get
+      // the first four cases read every column
+      val cols = if (i < 4) full.fieldNames.toSeq else picked
+      val p = OsmFixture.write(s"rows/doc-$i.osm", xml)
+      val df = spark.read.format("graft.sources.OsmXmlSource")
+        .option("splitBytes", splitBytes.toString)
+        .option("cleanStreets", cleanStreets.toString)
+        .option("includeRelations", includeRelations.toString)
+        .load(p.toString).select(cols.map(col): _*)
+      val got = df.queryExecution.toRdd.map(_.copy()).collect().toSeq
+      // the encoder's row, cut to the same columns, as the same bytes
+      val idx = cols.map(full.fieldIndex)
+      val toUnsafe = UnsafeProjection.create(StructType(cols.map(full(_))))
+      val want = OsmSource.parseElements(xml, cleanStreets, includeRelations).map { e =>
+        val r = serialize(e)
+        toUnsafe(new GenericInternalRow(idx.map(j => r.get(j, full(j).dataType)).toArray[Any])).copy()
+      }.toSeq
+      withClue(s"seed ${100 + i}, columns ${cols.mkString(",")}: ") {
+        got.length shouldBe want.length
+        got.zip(want).zipWithIndex.filter { case ((g, w), _) => g != w }.map(_._2) shouldBe empty
       }
     }
   }

@@ -87,15 +87,22 @@ class TextFunctionsSpec extends SparkSpec {
 
   test("merged-field splitter (readme.md:94-103)") {
     import spark.implicits._
-    val r = Seq("Spokane, WA 99218", "WA 99021", "plain text")
-      .toDF("v")
-      .select(T.mergedCity(col("v")).as("city"),
-        T.mergedState(col("v")).as("state"),
-        T.mergedPostcode(col("v")).as("post"))
+    val v = Seq("Spokane, WA 99218", "WA 99021", "plain text").toDF("v")
+    // the Column-form splitter of the repairs' reference model
+    val r = v.select(RepairsModel.mergedCity(col("v")).as("city"),
+        RepairsModel.mergedState(col("v")).as("state"),
+        RepairsModel.mergedPostcode(col("v")).as("post"))
       .collect()
     (r(0).getString(0), r(0).getString(1), r(0).getString(2)) shouldBe (("Spokane", "WA", "99218"))
     (r(1).getString(1), r(1).getString(2)) shouldBe (("WA", "99021"))
     r(2).getString(1) shouldBe "" // no capture
+    // and the native repair splits the same postcodes the same way
+    val none = lit(null).cast("string")
+    val fixed = graft.operators.Repairs.clean(v.select(col("v"), struct(none.as("street"),
+        col("v").as("postcode"), none.as("city"), none.as("state")).as("address")))
+      .select(col("address.city"), col("address.state"), col("address.postcode"))
+      .collect().map(r => (r.getString(0), r.getString(1), r.getString(2))).toSeq
+    fixed shouldBe Seq(("Spokane", "WA", "99218"), (null, "WA", "99021"), (null, null, "plain text"))
   }
 
   test("token counters, fingerprints: order sensitivity contract") {
