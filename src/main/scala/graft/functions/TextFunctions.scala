@@ -36,6 +36,18 @@ object TextFunctions {
     "Wellesley" -> "Wellesley Avenue",
     "Main" -> "Main Avenue")
 
+  /** `update_name` (data.py:110-118) on one value, for ingest shaping
+    * and the repair kernel alike: split like Python's `name.split()`
+    * (whitespace of every kind, tabs and newlines too), replace the last
+    * token iff it is a `streetMapping` key, else return `name` as is. */
+  def updateName(name: String): String = {
+    val parts = name.trim.split("\\s+")
+    streetMapping.get(parts.last) match {
+      case Some(rep) => (parts.init :+ rep).mkString(" ")
+      case None => name
+    }
+  }
+
   /** Last whitespace token of a street name — the reference's
     * `street_type_re = r'\b\S+\.?$'` (audit.py:18). On a
     * whitespace-split name the regex always selects the final token. */

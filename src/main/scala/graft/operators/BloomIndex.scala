@@ -75,12 +75,6 @@ object BloomIndex {
   private def bloomFile(path: String, column: String, b: Long): Path =
     new Path(s"$path/_bloomidx/$column/batch_$b.bloom")
 
-  private def columnType(spark: SparkSession, path: String,
-                         m: Snapshot.Manifest,
-                         column: String): org.apache.spark.sql.types.DataType =
-    m.schemaJson.map(j => Snapshot.structOf(j)(column).dataType)
-      .getOrElse(Snapshot.readBatches(spark, path, m).schema(column).dataType)
-
   private def requireSupported(dt: org.apache.spark.sql.types.DataType,
                                column: String): Unit = {
     import org.apache.spark.sql.types._
@@ -235,7 +229,7 @@ object BloomIndex {
     val m = Snapshot.latest(spark, path).getOrElse(
       throw new IllegalStateException(
         s"$path is not snapshot-enabled — bloom sidecars key off manifest batches"))
-    val dt = columnType(spark, path, m, column)
+    val dt = Snapshot.columnType(spark, path, m, column)
     requireSupported(dt, column)
     val fs = fsFor(spark, path)
     val live = m.batches.toSet
@@ -370,16 +364,19 @@ object BloomIndex {
     val m = Snapshot.latest(spark, path).getOrElse(
       throw new IllegalStateException(
         s"$path is not snapshot-enabled — readPoint resolves through manifest batches"))
-    requireSupported(columnType(spark, path, m, column), column)
+    requireSupported(Snapshot.columnType(spark, path, m, column), column)
     val (keep, _) = candidateBatches(spark, path, column, value, Some(m))
-    Snapshot.readKeepOrEmpty(spark, path, m, keep, col(column) === lit(value))
+    // the blooms' decision is the read: a batch no bloom covers is read
+    // whatever its zone map says, so the plan-time rule leaves it
+    Snapshot.readBatches(spark, path, m.copy(batches = keep), prunable = false)
+      .filter(col(column) === lit(value))
   }
 
   /** COMPOSED pruned lookup — every metadata structure the storage
     * layer maintains for the predicate, intersected BEFORE any file
     * IO: `pointCol = value` consults the per-batch bloom sidecars,
     * each `(rangeCol, lo, hi)` consults the manifest zone maps
-    * ([[Snapshot.rangeScreen]]), and only batches surviving EVERY
+    * ([[Snapshot.screen]]), and only batches surviving EVERY
     * screen are read. The screens run cheapest-first: zone maps are
     * pure manifest lookups, so bloom sidecars load only for
     * zone-surviving batches. On a Z-ordered governed layout
@@ -396,13 +393,14 @@ object BloomIndex {
       throw new IllegalStateException(
         s"$path is not snapshot-enabled — composed reads resolve through " +
           "manifest batches"))
-    requireSupported(columnType(spark, path, m, pointCol), pointCol)
+    requireSupported(Snapshot.columnType(spark, path, m, pointCol), pointCol)
     // every screen resolves against the SAME manifest snapshot — a
     // concurrent fold between screens must not empty the intersection
-    val (keep, rangeCond) = Snapshot.screenAll(spark, path, m, ranges)
-    val cond = rangeCond.foldLeft(col(pointCol) === lit(value))(_ && _)
-    val keepBloom = keep.filter(b =>
+    val ranged = ranges.map { case (c, lo, hi) =>
+      Snapshot.rangePredicate(spark, path, m, c, lo, hi) }.reduceOption(_ && _)
+    val keep = ranged.fold(m.batches)(Snapshot.screenWhere(spark, m, _)).filter(b =>
       loadBloom(spark, path, pointCol, b).forall(_.mightContain(value)))
-    Snapshot.readKeepOrEmpty(spark, path, m, keepBloom, cond)
+    Snapshot.readBatches(spark, path, m.copy(batches = keep), prunable = false)
+      .filter(ranged.foldLeft(col(pointCol) === lit(value))(_ && _))
   }
 }

@@ -1,10 +1,17 @@
 package graft.operators
 
 import scala.jdk.CollectionConverters._
+import scala.util.control.NonFatal
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.{And, Attribute, BinaryComparison, Cast,
+  EqualTo, Expression, GreaterThan, GreaterThanOrEqual, In, InSet, LessThan, LessThanOrEqual,
+  Literal, Or, UnixMicros}
+import org.apache.spark.sql.execution.datasources.{DataSource, HadoopFsRelation}
 import org.apache.spark.sql.functions.{col, lit}
+import org.apache.spark.sql.types.{BooleanType, DataType, IntegerType, LongType, NumericType,
+  TimestampType}
 
 /** ATOMIC SNAPSHOT COMMIT for the batch-partitioned table family
   * (MinHash / embedding / IVF / posting indexes, HLL/KLL sketch
@@ -209,8 +216,8 @@ object Snapshot {
   /** Reserved stats key carrying the batch's ROW COUNT as a
     * pseudo-column entry (count as both bounds): it rides the existing
     * per-batch stats map and its JSON unchanged, is inert for zone-map
-    * pruning ([[mayOverlap]] looks up real query columns only), and
-    * feeds [[graft.plans.ManifestStatsRule]]'s Catalyst statistics so
+    * pruning ([[screen]] looks up real query columns only), and
+    * feeds [[graft.plans.SnapshotFileIndex]]'s Catalyst statistics so
     * governed joins pick their strategy from true row counts instead
     * of compressed file bytes. A data column with this name is
     * excluded from stats capture rather than clobbering it. */
@@ -280,9 +287,9 @@ object Snapshot {
     * `unix_micros`) — with set null counts and, when any non-null row
     * exists, set min/max. NaN suppresses parquet float stats and
     * INT96 carries none, so both fall back rather than guess. The
-    * consumers ([[mayOverlap]], [[readTopK]], ManifestStatsRule)
-    * parse the strings as BigDecimal/Long, so rendering only needs to
-    * be value-identical with the aggregate, which these mappings are. */
+    * consumers ([[screen]], [[readTopK]], SnapshotFileIndex) parse
+    * the strings back into values, so rendering only needs to be
+    * value-identical with the aggregate, which these mappings are. */
   private[graft] def footerBatchStats(spark: SparkSession,
       dir: String): Option[Map[String, (String, String)]] =
     footerBatchInfo(spark, dir).stats
@@ -535,18 +542,74 @@ object Snapshot {
       catch { case e: java.util.concurrent.ExecutionException => throw e.getCause }
     }
 
-  /** Can a batch with stats `st` possibly hold a row whose `column`
-    * lies in [lo, hi]? Missing stats → yes (never skip blind). */
-  private[operators] def mayOverlap(st: Map[String, (String, String)],
-      column: String, lo: BigDecimal, hi: BigDecimal): Boolean =
-    st.get(column) match {
-      case Some((mn, mx)) =>
-        (scala.util.Try(BigDecimal(mn)).toOption,
-          scala.util.Try(BigDecimal(mx)).toOption) match {
-          case (Some(bMn), Some(bMx)) => bMx >= lo && bMn <= hi
-          case _ => true // defensive: an unparsable stat never prunes
-        }
-      case None => true
+  /** ZONE-MAP SCREEN, the one overlap test every pruning path shares
+    * (the plan-time [[graft.plans.SnapshotPruning]] rule, the range and
+    * bloom readers, the writers' candidate scans): the ids of
+    * `m.batches` whose stats say some row may satisfy the resolved
+    * predicate `cond`. Understood: AND / OR, `<` `<=` `>` `>=` `=`, IN
+    * and the FALSE / NULL literal, with a column (under widening casts
+    * or `unix_micros`) on one side and a foldable value on the other;
+    * `batch_id` screens as [b, b]. Bounds are cast back to the column's
+    * type and compared by Catalyst, so NaN, ±Inf and floats whose
+    * decimal rendering is not exact compare as the row predicate does.
+    * Any other shape, a missing stat or a failed evaluation keeps the
+    * batch: pruning is only ever an optimization. */
+  private[graft] def screen(m: Manifest, cond: Expression): Seq[Long] =
+    m.batches.filter { b =>
+      def bounds(a: Attribute): Option[(Any, Any)] = {
+        def of(s: String) = scala.util.Try(Cast(Literal(s),
+          if (a.dataType == TimestampType) LongType else a.dataType).eval()).toOption.filter(_ != null)
+        (if (a.name == "batch_id") Some((b.toString, b.toString))
+         else m.stats.getOrElse(b, Map.empty).get(a.name))
+          .flatMap { case (lo, hi) => for (l <- of(lo); h <- of(hi)) yield (l, h) }
+      }
+      def holds(p: Expression) = try p.eval() == true catch { case NonFatal(_) => true }
+      def may(e: Expression): Boolean = e match {
+        case And(l, r) => may(l) && may(r)
+        case Or(l, r) => may(l) || may(r)
+        case Literal(v, BooleanType) => v == true
+        case In(v, list) if list.forall(_.foldable) => list.exists(x => may(EqualTo(v, x)))
+        case InSet(v, set) => set.exists(x => may(EqualTo(v, Literal(x, v.dataType))))
+        case c: BinaryComparison if c.left.foldable != c.right.foldable =>
+          val colLeft = c.right.foldable
+          val (side, v) = if (colLeft) (c.left, c.right) else (c.right, c.left)
+          monotoneColumn(side).flatMap(bounds).forall { case (lo, hi) =>
+            def at(x: Any) = side.transform { case a: Attribute => Literal(x, a.dataType) }
+            def put(x: Any) = holds(c.withNewChildren(if (colLeft) Seq(at(x), v) else Seq(v, at(x))))
+            c match {
+              case _: EqualTo => holds(LessThanOrEqual(at(lo), v)) && holds(GreaterThanOrEqual(at(hi), v))
+              case _: GreaterThan | _: GreaterThanOrEqual => put(if (colLeft) hi else lo)
+              case _: LessThan | _: LessThanOrEqual => put(if (colLeft) lo else hi)
+              case _ => true
+            }
+          }
+        case _ => true
+      }
+      may(cond)
+    }
+
+  /** The column under order-preserving wrappers, if `e` is one. */
+  @scala.annotation.tailrec
+  private def monotoneColumn(e: Expression): Option[Attribute] = e match {
+    case a: Attribute => Some(a)
+    case c: Cast if c.child.dataType.isInstanceOf[NumericType] &&
+        c.dataType.isInstanceOf[NumericType] &&
+        Cast.canUpCast(c.child.dataType, c.dataType) => monotoneColumn(c.child)
+    case UnixMicros(c) => monotoneColumn(c)
+    case _ => None
+  }
+
+  /** [[screen]] for a Column predicate, resolved against the manifest's
+    * schema (no listing, no file IO). A manifest without a schema
+    * screens nothing here; its reads are pruned at plan time. */
+  private[graft] def screenWhere(spark: SparkSession, m: Manifest,
+                               cond: org.apache.spark.sql.Column): Seq[Long] =
+    m.schemaJson.fold(m.batches) { j =>
+      spark.createDataFrame(java.util.Collections.emptyList[org.apache.spark.sql.Row](),
+        structOf(j)).filter(cond).queryExecution.analyzed match {
+        case org.apache.spark.sql.catalyst.plans.logical.Filter(c, _) => screen(m, c)
+        case _ => m.batches
+      }
     }
 
   /** ATOMIC OVERWRITE of a small metadata file: write a temp sibling,
@@ -981,15 +1044,22 @@ object Snapshot {
   def read(spark: SparkSession, path: String): DataFrame =
     latest(spark, path) match {
       case None => spark.read.parquet(path)
-      case Some(m) => readBatches(spark, path, m)
+      case Some(m) => readLive(spark, path, m)
     }
+
+  private def readLive(spark: SparkSession, path: String, m: Manifest): DataFrame = {
+    require(m.batches.nonEmpty,
+      s"manifest v${m.version} of $path lists no live batches — fully " +
+        "retired table; re-build or append before reading")
+    readBatches(spark, path, m)
+  }
 
   /** PINNED reader: resolve through manifest `version` specifically —
     * the view is stable under any number of later publishes, and only
     * expires when [[vacuum]] physically removes a directory it
     * references. */
   def readAt(spark: SparkSession, path: String, version: Long): DataFrame =
-    readBatches(spark, path, readManifest(spark, path, version))
+    readLive(spark, path, readManifest(spark, path, version))
 
   /** A version's commit time: the manifest's writer-clock stamp, or —
     * for manifests published before the field existed — the manifest
@@ -1037,42 +1107,30 @@ object Snapshot {
     * serving the current one would be a wrong answer, the
     * [[readManifest]] discipline). */
   def readAsOf(spark: SparkSession, path: String, tsMs: Long): DataFrame =
-    readBatches(spark, path, manifestAsOf(spark, path, tsMs).getOrElse(
+    readLive(spark, path, manifestAsOf(spark, path, tsMs).getOrElse(
       throw new IllegalStateException(
         s"no snapshot of $path existed at epoch-ms $tsMs — first commit " +
           "is later (or the table is not snapshot-enabled)")))
 
+  /** The governed relation over `m.batches`: the parquet relation
+    * `spark.read.option("basePath", path).schema(manifest schema)
+    * .parquet(dirs)` builds, its file index swapped for a
+    * [[graft.plans.SnapshotFileIndex]] carrying `m`. No batch → the
+    * schema-only empty frame (zero file IO). */
   private[graft] def readBatches(spark: SparkSession, path: String,
-                          m: Manifest): DataFrame = {
-    require(m.batches.nonEmpty,
-      s"manifest v${m.version} of $path lists no live batches — fully " +
-        "retired table; re-build or append before reading")
-    val dirs = batchDirs(path, m.batches)
-    // manifest stats → Catalyst statistics: when EVERY batch being
-    // read carries a row count, register (exact dir set → row sum) so
-    // ManifestStatsRule lets the planner pick join strategies from
-    // true row counts instead of compressed file bytes. Metadata-only;
-    // a batch without the stat (pre-row-count lineage) just skips
-    // registration — never a wrong statistic from a partial sum.
-    val rowCounts = m.batches
-      .map(b => m.stats.getOrElse(b, Map.empty).get(RowsStatKey)
-        .flatMap(s => scala.util.Try(s._1.toLong).toOption))
-    if (rowCounts.forall(_.isDefined)) {
-      // one cached FileSystem qualifies every dir (all under `path`):
-      // r20 built a FRESH Hadoop conf (a full Configuration clone) and
-      // re-resolved a FileSystem per dir on EVERY governed read — in
-      // the micro-batch ingest loop, which reads its indexes per
-      // batch, that driver latency compounded (VERDICT r20 task #1)
-      val fs = fsFor(spark, path)
-      val qualified = dirs.map(d => fs.makeQualified(new Path(d)).toString).toSet
-      graft.plans.ManifestStatsRule.register(spark, qualified,
-        rowCounts.flatten.sum)
-    }
-    val rdr = spark.read.option("basePath", path)
-    // manifest-governed schema: batches written before a column
-    // existed null-fill it; `batch_id` re-appends as partition column
-    m.schemaJson.map(j => rdr.schema(structOf(j))).getOrElse(rdr)
-      .parquet(dirs: _*)
+                                 m: Manifest, prunable: Boolean = true): DataFrame = {
+    val schema = m.schemaJson.map(structOf)
+    require(m.batches.nonEmpty || schema.isDefined,
+      s"manifest v${m.version} of $path lists no batches to read and no schema")
+    val rel = DataSource(spark, "parquet", paths = batchDirs(path, m.batches),
+      userSpecifiedSchema =
+        if (m.batches.nonEmpty) schema else schema.map(_.add("batch_id", IntegerType)),
+      options = Map("basePath" -> path)).resolveRelation().asInstanceOf[HadoopFsRelation]
+    // deserialized row width: Catalyst's defaultSize per column + 8
+    // bytes of row overhead (the LocalRelation/EstimationUtils convention)
+    val rowWidth = rel.schema.map(_.dataType.defaultSize.toLong).sum + 8L
+    spark.baseRelationToDataFrame(rel.copy(location =
+      new graft.plans.SnapshotFileIndex(rel.location, m, rowWidth, prunable))(rel.sparkSession))
   }
 
   /** Logical retention — the manifest edit behind
@@ -1493,30 +1551,19 @@ object Snapshot {
     * of [[merge]] / [[deleteMatching]] to the handful of overlapping
     * batches. Numeric/timestamp keys only; anything else keeps every
     * batch a candidate (pruning is only ever an optimization). */
-  private def keyBoundCandidates(m: Manifest, df: DataFrame,
-                                 keyCols: Seq[String]): Seq[Long] = {
+  private def keyBoundCandidates(spark: SparkSession, m: Manifest,
+      df: DataFrame, keyCols: Seq[String]): Seq[Long] = {
     val numericKeys = keyCols.filter(k =>
       df.schema.fields.exists(f => f.name == k && statable(f.dataType)))
-    val keyBounds: Seq[(String, BigDecimal, BigDecimal)] =
-      if (numericKeys.isEmpty) Seq.empty
-      else {
-        val aggs = numericKeys.flatMap(k => Seq(
-          org.apache.spark.sql.functions.min(statCol(df.schema(k)))
-            .cast("string").as(s"__mn_$k"),
-          org.apache.spark.sql.functions.max(statCol(df.schema(k)))
-            .cast("string").as(s"__mx_$k")))
-        val row = df.agg(aggs.head, aggs.tail: _*).head()
-        numericKeys.zipWithIndex.flatMap { case (k, i) =>
-          (Option(row.getString(2 * i)), Option(row.getString(2 * i + 1))) match {
-            case (Some(mn), Some(mx)) =>
-              scala.util.Try((k, BigDecimal(mn), BigDecimal(mx))).toOption
-            case _ => None
-          }
-        }
-      }
-    m.batches.filter(b => keyBounds.forall {
-      case (c, lo, hi) => mayOverlap(m.stats.getOrElse(b, Map.empty), c, lo, hi)
-    })
+    if (numericKeys.isEmpty) return m.batches
+    val aggs = numericKeys.flatMap(k => Seq(
+      org.apache.spark.sql.functions.min(col(k)),
+      org.apache.spark.sql.functions.max(col(k))))
+    val row = df.agg(aggs.head, aggs.tail: _*).head()
+    numericKeys.indices.collect {
+      case i if !row.isNullAt(2 * i) && !row.isNullAt(2 * i + 1) =>
+        col(numericKeys(i)).between(lit(row.get(2 * i)), lit(row.get(2 * i + 1)))
+    }.reduceOption(_ && _).fold(m.batches)(screenWhere(spark, m, _))
   }
 
   def merge(spark: SparkSession, path: String, updates: DataFrame,
@@ -1544,7 +1591,7 @@ object Snapshot {
       "duplicate keys in updates — which copy wins would be partition-order " +
         "nondeterminism; dedupe upstream")
 
-    val candidates = keyBoundCandidates(m, updates, keyCols)
+    val candidates = keyBoundCandidates(spark, m, updates, keyCols)
     val keys = updates.select(keyCols.map(col): _*)
     // 1. keys-only scan of the CANDIDATE batches to find affected ones
     //    (bounded driver state: one row per batch id)
@@ -1656,7 +1703,7 @@ object Snapshot {
       s"$path is not snapshot-enabled — deleteMatching needs a manifest " +
         "to flip"))
     val keyTab = keys.select(keyCols.map(col): _*)
-    val candidates = keyBoundCandidates(m, keyTab, keyCols)
+    val candidates = keyBoundCandidates(spark, m, keyTab, keyCols)
     if (candidates.isEmpty) return MergeStats(0L, 0L, Seq.empty, None)
     val cand = readBatches(spark, path, m.copy(batches = candidates))
     val affected = cand.join(keyTab, keyCols, "left_semi")
@@ -1696,23 +1743,10 @@ object Snapshot {
     * pruning is only ever an optimization. */
   def deleteRange(spark: SparkSession, path: String, column: String,
                   lo: BigDecimal, hi: BigDecimal): MergeStats = {
-    require(lo <= hi, s"empty range: $lo > $hi")
     val m = latest(spark, path).getOrElse(throw new IllegalStateException(
       s"$path is not snapshot-enabled — deleteRange needs a manifest to flip"))
-    val dt = m.schemaJson.map(j => structOf(j)(column).dataType).getOrElse {
-      readBatches(spark, path, m).schema(column).dataType
-    }
-    require(statable(dt), s"deleteRange needs a numeric/timestamp column; " +
-      s"'$column' is ${dt.simpleString} — use deleteWhere")
-    // one normalization feeds BOTH the row predicate and the prune, so
-    // fractional bounds on an integral column can never make the two
-    // disagree; an inward-rounded-empty range deletes nothing
-    val (nlo, nhi) = normRange(dt, lo, hi)
-    if (nlo > nhi) return MergeStats(0L, 0L, Seq.empty, None)
-    val cond = rangeCond(column, dt, nlo, nhi)
-    val candidates = m.batches.filter(b =>
-      mayOverlap(m.stats.getOrElse(b, Map.empty), column, nlo, nhi))
-    deleteFrom(spark, path, m, candidates, cond)
+    val cond = rangePredicate(spark, path, m, column, lo, hi)
+    deleteFrom(spark, path, m, screenWhere(spark, m, cond), cond)
   }
 
   /** Shared find-affected + fold + flip tail of [[deleteWhere]] /
@@ -1762,43 +1796,8 @@ object Snapshot {
     * read. For integral/timestamp columns the bounds' integer parts
     * are used. */
   def readRange(spark: SparkSession, path: String, column: String,
-                lo: BigDecimal, hi: BigDecimal): DataFrame = {
-    val (m, candidates, cond) = rangeScreen(spark, path, column, lo, hi)
-    readKeepOrEmpty(spark, path, m, candidates, cond)
-  }
-
-  /** Read `keep` batches under `cond`, or the schema-only empty frame
-    * (ZERO file IO) when every batch was pruned — the shared tail of
-    * every pruning reader here and in [[BloomIndex]] (one copy, or the
-    * empty-frame shape drifts between them — review r17 #5). */
-  private[operators] def readKeepOrEmpty(spark: SparkSession, path: String,
-      m: Manifest, keep: Seq[Long],
-      cond: org.apache.spark.sql.Column): DataFrame =
-    if (keep.isEmpty) m.schemaJson match {
-      case Some(j) => // schema-only empty frame: zero file IO
-        spark.createDataFrame(
-          new java.util.ArrayList[org.apache.spark.sql.Row](), structOf(j))
-          .withColumn("batch_id", lit(null).cast("int")).filter(cond)
-      case None => readBatches(spark, path, m).limit(0).filter(cond)
-    }
-    else readBatches(spark, path, m.copy(batches = keep)).filter(cond)
-
-  /** Intersect every `(column, lo, hi)` screen against the ONE manifest
-    * snapshot `m`: surviving batch ids + the conjoined row predicate.
-    * Shared by [[readRanges]] and [[BloomIndex.readPointRanges]]. */
-  private[operators] def screenAll(spark: SparkSession, path: String,
-      m: Manifest, ranges: Seq[(String, BigDecimal, BigDecimal)])
-      : (Seq[Long], Option[org.apache.spark.sql.Column]) = {
-    var keep = m.batches
-    var cond: Option[org.apache.spark.sql.Column] = None
-    ranges.foreach { case (c, lo, hi) =>
-      val (_, cand, rc) = rangeScreen(spark, path, c, lo, hi, within = Some(m))
-      val candSet = cand.toSet
-      keep = keep.filter(candSet)
-      cond = Some(cond.map(_ && rc).getOrElse(rc))
-    }
-    (keep, cond)
-  }
+                lo: BigDecimal, hi: BigDecimal): DataFrame =
+    readRanges(spark, path, Seq((column, lo, hi)))
 
   /** Backfill ZONE-MAP stats for STAT-LESS live batches — the
     * enable-listed first batch (the rt5 contrast's forever-blind
@@ -1854,9 +1853,12 @@ object Snapshot {
                  ranges: Seq[(String, BigDecimal, BigDecimal)]): DataFrame = {
     require(ranges.nonEmpty, "readRanges needs at least one range")
     val m = latest(spark, path).getOrElse(throw new IllegalStateException(
-      s"$path is not snapshot-enabled — readRanges resolves through manifest stats"))
-    val (keep, cond) = screenAll(spark, path, m, ranges)
-    readKeepOrEmpty(spark, path, m, keep, cond.get)
+      s"$path is not snapshot-enabled — range reads resolve through manifest stats"))
+    val cond = ranges.map { case (c, lo, hi) => rangePredicate(spark, path, m, c, lo, hi) }
+      .reduce(_ && _)
+    // screened BEFORE listing: a pruned batch's directory is never
+    // touched, not even by the planner's file listing
+    readBatches(spark, path, m.copy(batches = screenWhere(spark, m, cond))).filter(cond)
   }
 
   /** ORDER-BY-LIMIT ZONE-MAP PRUNING — the metadata top-k read: skip
@@ -1889,8 +1891,7 @@ object Snapshot {
     require(k >= 1, s"k=$k must be >= 1")
     val m = latest(spark, path).getOrElse(throw new IllegalStateException(
       s"$path is not snapshot-enabled — readTopK resolves through manifest stats"))
-    val dt = m.schemaJson.map(j => structOf(j)(column).dataType)
-      .getOrElse(readBatches(spark, path, m).schema(column).dataType)
+    val dt = columnType(spark, path, m, column)
     require(statable(dt), s"readTopK needs a numeric/timestamp column; " +
       s"'$column' is ${dt.simpleString}")
     def dec(s: String): Option[BigDecimal] =
@@ -1974,42 +1975,32 @@ object Snapshot {
     }
   }
 
-  /** The metadata-only half of [[readRange]], reusable by readers that
-    * COMPOSE prunings ([[BloomIndex.readPointRanges]]: bloom point ×
-    * zone range): the manifest, the live batch ids whose stats may
-    * overlap [lo, hi] (stats-less batches conservatively survive), and
-    * the exact row predicate both agree on. No file IO. */
-  private[graft] def rangeScreen(spark: SparkSession, path: String,
-      column: String, lo: BigDecimal, hi: BigDecimal,
-      within: Option[Manifest] = None)
-      : (Manifest, Seq[Long], org.apache.spark.sql.Column) = {
-    require(lo <= hi, s"empty range: $lo > $hi")
-    // `within`: composed readers pass the manifest they already
-    // resolved so every screen sees ONE snapshot — re-reading latest()
-    // per screen would let a concurrent fold publish between screens
-    // and empty the intersection (silent missing rows; review r17)
-    val m = within.orElse(latest(spark, path)).getOrElse(
-      throw new IllegalStateException(
-        s"$path is not snapshot-enabled — range reads resolve through manifest stats"))
-    // resolve the column's type from the MANIFEST schema when it is
-    // there — planning the full table just to learn a dtype would touch
-    // (and demand the existence of) every live batch dir, defeating the
-    // metadata-only promise. Pre-schema manifests fall back to planning.
-    val dt = m.schemaJson.map(j => structOf(j)(column).dataType)
+  /** A column's type from the MANIFEST schema when it is there —
+    * planning the table just to learn a dtype would list (and demand
+    * the existence of) every live batch dir. Pre-schema manifests fall
+    * back to planning. */
+  private[graft] def columnType(spark: SparkSession, path: String, m: Manifest,
+                                column: String): DataType =
+    m.schemaJson.map(j => structOf(j)(column).dataType)
       .getOrElse(readBatches(spark, path, m).schema(column).dataType)
-    require(statable(dt), s"readRange needs a numeric/timestamp column; " +
+
+  /** The row predicate of the inclusive range [lo, hi] on `column`,
+    * shared by [[readRanges]], [[deleteRange]] and
+    * [[BloomIndex.readPointRanges]]: bounds normalized to the column's
+    * domain ([[normRange]]), FALSE when that empties the range (which
+    * screens every batch away: zero file IO). */
+  private[graft] def rangePredicate(spark: SparkSession, path: String, m: Manifest,
+      column: String, lo: BigDecimal, hi: BigDecimal): org.apache.spark.sql.Column = {
+    require(lo <= hi, s"empty range: $lo > $hi")
+    val dt = columnType(spark, path, m, column)
+    require(statable(dt), s"range predicates need a numeric/timestamp column; " +
       s"'$column' is ${dt.simpleString}")
     val (nlo, nhi) = normRange(dt, lo, hi)
-    val cond = rangeCond(column, dt, nlo, nhi)
-    val candidates =
-      if (nlo > nhi) Seq.empty[Long] // inward-rounded empty: zero IO
-      else m.batches.filter(b =>
-        mayOverlap(m.stats.getOrElse(b, Map.empty), column, nlo, nhi))
-    (m, candidates, cond)
+    if (nlo > nhi) lit(false) else rangeCond(column, dt, nlo, nhi)
   }
 
   /** Normalize [lo,hi] to the column's value domain so the ROW
-    * predicate ([[rangeCond]]) and the ZONE-MAP prune ([[mayOverlap]])
+    * predicate ([[rangeCond]]) and the ZONE-MAP prune ([[screen]])
     * agree on exactly the same range: for integral/timestamp columns a
     * fractional bound is tightened INWARD (lo rounds up, hi rounds
     * down — [120.5, 500.7] means the integers [121, 500]). Without

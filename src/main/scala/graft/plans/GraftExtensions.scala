@@ -55,7 +55,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
   override def apply(ext: SparkSessionExtensions): Unit = {
     ext.injectOptimizerRule(_ => BoxPipRewrite)
-    ext.injectOptimizerRule(s => new ManifestStatsRule(s))
+    ext.injectOptimizerRule(_ => SnapshotPruning)
     ext.injectFunction(GraftExtensions.pipDescriptor)
     ext.injectFunction(GraftExtensions.haversineDescriptor)
     ext.injectFunction(GraftExtensions.cosineDescriptor)

@@ -22,11 +22,10 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * Each rule runs on `UTF8String` through the same routines Spark's
   * built-ins call — `java.util.regex` `find` for `rlike` /
-  * `regexp_extract` / `regexp_replace`, space-only `trim`,
-  * `split(…, -1)`, and `CollationSupport`'s `upper` / `initcap` under
-  * the session's ICU case-mapping flag — so a value the rule touches
-  * comes out byte-identical to the `Column` form (RepairsSpec pins the
-  * equality on generated structs):
+  * `regexp_extract` / `regexp_replace`, and `CollationSupport`'s
+  * `upper` / `initcap` under the session's ICU case-mapping flag — so a
+  * value the rule touches comes out byte-identical to the `Column`
+  * form (RepairsSpec pins the equality on generated structs):
   *
   *  1. M3/F8 (readme.md:43-52,94-103) — a merged postcode
   *     "Spokane, WA 99218" splits into city/state/postcode; the city
@@ -41,7 +40,8 @@ import org.apache.spark.unsafe.types.UTF8String
   *     would), then the Coeur d'Alene spellings unify and an
   *     all-lowercase start is initcapped.
   *  1. F4 (update_name, ProjectCodeUsed/data.py:110-118) — the last
-  *     street token is mapped through `streetMapping`, unless the name
+  *     street token is mapped by `TextFunctions.updateName`, the
+  *     ingest path's own body, unless the name
   *     already ends in one of its images ("Arthur St", "Street", ...):
   *     the mapping is not idempotent ("Arthur" → "Arthur St" →
   *     "Arthur Street"), and the reference stops at the first step.
@@ -94,7 +94,8 @@ case class RepairAddressExpr(child: Expression) extends UnaryExpression with Cod
       st = CollationSupport.Upper.exec(st, Binary, useICU)
     if (ct != null) ct = repairCity(ct)
     val sn = out(street).asInstanceOf[UTF8String]
-    if (sn != null && !finds(MappedEnding, sn)) out(street) = normalizeStreet(sn)
+    if (sn != null && !finds(MappedEnding, sn))
+      out(street) = UTF8String.fromString(graft.functions.TextFunctions.updateName(sn.toString))
 
     out(postcode) = pc
     out(city) = ct
@@ -129,13 +130,6 @@ object RepairAddressExpr {
   private val CoeurDAlene = Pattern.compile("^Coeur d[^']Alene$")
   private val CoeurDAleneFixed = UTF8String.fromString("Coeur d'Alene")
   private val LowerStart = Pattern.compile("^[a-z]")
-  private val Whitespace = UTF8String.fromString("\\s+")
-  private val Space = UTF8String.fromString(" ")
-
-  private val StreetMapping: Map[UTF8String, UTF8String] =
-    graft.functions.TextFunctions.streetMapping.map { case (k, v) =>
-      UTF8String.fromString(k) -> UTF8String.fromString(v) }
-
   /** Whole-word endings equal to an image of the street mapping. */
   private val MappedEnding = Pattern.compile(
     graft.functions.TextFunctions.streetMapping.values.toSeq.distinct
@@ -143,17 +137,4 @@ object RepairAddressExpr {
 
   /** `rlike`: an unanchored `find` over the whole string. */
   private def finds(p: Pattern, s: UTF8String): Boolean = p.matcher(s.toString).find(0)
-
-  /** `TextFunctions.normalizeStreet` on one value: replace the last
-    * token of the space-trimmed, `\s+`-split name iff it is a mapping
-    * key, joining the tokens with single spaces. */
-  private def normalizeStreet(name: UTF8String): UTF8String = {
-    val parts = CollationSupport.StringTrim.exec(name).split(Whitespace, -1)
-    StreetMapping.get(parts.last) match {
-      case Some(rep) =>
-        parts(parts.length - 1) = rep
-        UTF8String.concatWs(Space, parts: _*)
-      case None => name
-    }
-  }
 }

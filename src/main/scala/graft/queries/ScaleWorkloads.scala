@@ -789,23 +789,12 @@ object ScaleWorkloads {
     }
     s.sparkContext.addSparkListener(listener)
     val t0 = System.nanoTime()
-    var wallMs = 0.0 // captured BEFORE the quiescence polling below —
-    // the poll sleeps 0.75-5 s, which must not inflate the driver gap
+    var wallMs = 0.0 // captured BEFORE the listener-bus drain below
     try {
       graft.queries.PipelineQueries.defs("st5_unified_ingest")(s, "").collect()
       wallMs = (System.nanoTime() - t0) / 1e6
     } finally {
-      // async listener bus: poll to quiescence (maxMedianTaskRatio's
-      // two-stable-reads pattern), bounded at ~5 s
-      var last = -1
-      var stable = 0
-      var polls = 0
-      while (stable < 2 && polls < 20) {
-        Thread.sleep(250)
-        val n = starts.synchronized(durs.size) // one lock guards both
-        if (n == last) stable += 1 else { stable = 0; last = n }
-        polls += 1
-      }
+      org.apache.spark.sql.graftbridge.ColumnBridge.drainListenerBus(s.sparkContext)
       s.sparkContext.removeSparkListener(listener)
     }
     val (inJobMs, nJobs) = starts.synchronized((durs.sum.toDouble, durs.size))
@@ -855,19 +844,9 @@ object ScaleWorkloads {
     s.sparkContext.addSparkListener(listener)
     try df.write.format("noop").mode("overwrite").save()
     finally {
-      // the listener bus is async — poll until the buffer goes quiet
-      // (two consecutive stable reads) instead of one fixed sleep a
-      // GC-pressured driver could outlast, losing the hot task's very
-      // TaskEnd the ratio depends on; bounded at ~5 s
-      var last = -1
-      var stable = 0
-      var polls = 0
-      while (stable < 2 && polls < 20) {
-        Thread.sleep(250)
-        val n = buf.synchronized(buf.size)
-        if (n == last) stable += 1 else { stable = 0; last = n }
-        polls += 1
-      }
+      // the listener bus is async: drain it so the hot task's TaskEnd,
+      // which the ratio depends on, has been delivered
+      org.apache.spark.sql.graftbridge.ColumnBridge.drainListenerBus(s.sparkContext)
       s.sparkContext.removeSparkListener(listener)
     }
     skewRatioFromTasks(buf.synchronized { buf.toVector })

@@ -347,7 +347,8 @@ object OsmSource {
                       if (problemChars.findFirstIn(key).isEmpty &&
                           lowerColon.findFirstMatchIn(key).isEmpty) {
                         val value =
-                          if (key == "street" && cleanStreets) updateName(v)
+                          if (key == "street" && cleanStreets)
+                            graft.functions.TextFunctions.updateName(v)
                           else v
                         if (addressFields.contains(key)) address += key -> value
                         else tags += k -> value // fixed-schema overflow
@@ -395,18 +396,6 @@ object OsmSource {
         }
         null
       }
-    }
-  }
-
-  /** `update_name` (ProjectCodeUsed/data.py:110-118) — driver/executor
-    * Scala twin of TextFunctions.normalizeStreet (same mapping, same
-    * last-token rule); used during ingest shaping where we're already
-    * row-at-a-time inside the parser. */
-  private[sources] def updateName(name: String): String = {
-    val parts = name.trim.split("\\s+")
-    graft.functions.TextFunctions.streetMapping.get(parts.last) match {
-      case Some(rep) => (parts.init :+ rep).mkString(" ")
-      case None => name
     }
   }
 }

@@ -36,6 +36,13 @@ object ColumnBridge {
       to.asInstanceOf[org.apache.spark.sql.classic.SparkSession],
       df.queryExecution.analyzed)
 
+  /** Block until the async listener bus has delivered every event
+    * posted so far (`waitUntilEmpty` is private[spark]; 10 s bound). A
+    * finished action has posted its job and task ends, so a listener
+    * read after this sees all of them. */
+  def drainListenerBus(sc: org.apache.spark.SparkContext): Unit =
+    sc.listenerBus.waitUntilEmpty()
+
   /** True session clone (`cloneSession()` is private[sql]): unlike
     * `newSession()`, the clone COPIES the caller's full SessionState —
     * including runtime `spark.conf.set` values that never reached the

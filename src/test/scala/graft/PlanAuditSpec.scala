@@ -584,13 +584,11 @@ class PlanAuditSpec extends SparkSpec {
     pSmall should include("BroadcastHashJoin")
     val pBig = fact.join(Snapshot.read(spark, big), "k")
       .queryExecution.executedPlan.toString
-    pBig should include("graft_governed_scan") // the rule fired
+    pBig should include("SnapshotFileIndex") // the governed index planned it
     pBig should not include "BroadcastHashJoin"
     // the CONTRAST that proves it's the manifest talking: the same
-    // 2M rows in an UNREGISTERED copy look tiny on disk and (wrongly)
-    // broadcast — file bytes are the lying statistic. (Reading the
-    // governed dir itself raw picks up the registered stats too — the
-    // registry keys on the dir set, and same files = same true rows.)
+    // 2M rows in an ungoverned copy look tiny on disk and (wrongly)
+    // broadcast — file bytes are the lying statistic
     val rawCopy = graft.TempDirs.path(
       s"snapshot/pa-rawcopy-${java.util.UUID.randomUUID()}")
     spark.read.parquet(s"$big/batch_id=0").write.parquet(rawCopy)
@@ -599,38 +597,21 @@ class PlanAuditSpec extends SparkSpec {
     pRaw should include("BroadcastHashJoin")
   }
 
-  test("ManifestStatsRule registry is per-session and LRU-bounded: no " +
-    "cross-session clobber, no wholesale clear (r21, VERDICT r20 #7)") {
-    import graft.plans.ManifestStatsRule
-    val other = spark.newSession()
-    val dirsA = Set("file:/graft-msr-spec/a/batch_id=0")
-    ManifestStatsRule.register(spark, dirsA, 42L)
-    // registered session resolves; the OTHER session must not see it
-    ManifestStatsRule.lookup(spark, dirsA) shouldBe Some(42L)
-    ManifestStatsRule.lookup(other, dirsA) shouldBe None
-    // clearing the other session must not clobber this session's entry
-    ManifestStatsRule.clear(other)
-    ManifestStatsRule.lookup(spark, dirsA) shouldBe Some(42L)
-    // LRU at the cap: flood the OTHER session's registry past 1024
-    // entries while touching a pinned key — the pinned (recently-used)
-    // entry survives where r20's wholesale clear dropped EVERYTHING,
-    // and untouched old keys are the ones evicted
-    val pinned = Set("file:/graft-msr-spec/pinned/batch_id=0")
-    ManifestStatsRule.register(other, pinned, 7L)
-    (0 until 1500).foreach { i =>
-      ManifestStatsRule.register(other,
-        Set(s"file:/graft-msr-spec/flood/batch_id=$i"), i.toLong)
-      if (i % 100 == 0) // keep the pinned entry recently used
-        ManifestStatsRule.lookup(other, pinned) shouldBe Some(7L)
-    }
-    ManifestStatsRule.lookup(other, pinned) shouldBe Some(7L)
-    ManifestStatsRule.lookup(other,
-      Set("file:/graft-msr-spec/flood/batch_id=0")) shouldBe None // evicted
-    ManifestStatsRule.lookup(other,
-      Set("file:/graft-msr-spec/flood/batch_id=1499")) shouldBe Some(1499L)
-    ManifestStatsRule.clear(other)
-    // and the flood never touched the base session
-    ManifestStatsRule.lookup(spark, dirsA) shouldBe Some(42L)
+  test("a plain governed read prunes at plan time: Snapshot.read(p).filter(x > c) " +
+    "lists only the batches whose zone maps overlap") {
+    import spark.implicits._
+    import graft.operators.Snapshot
+    val p = graft.TempDirs.path(s"snapshot/pa-prune-${java.util.UUID.randomUUID()}")
+    Seq((1L, "a"), (5L, "b")).toDF("x", "k").write.parquet(s"$p/batch_id=0")
+    Snapshot.enable(spark, p) // batch 0: no stats, always read
+    for ((b, lo) <- Seq((1L, 10L), (2L, 20L), (3L, 30L)))
+      Snapshot.stagedAppend(spark, p, b) {
+        Seq((lo, "c"), (lo + 5, "d")).toDF("x", "k").write.parquet(s"$p/batch_id=$b")
+      }
+    val df = Snapshot.read(spark, p).filter($"x" > 22L)
+    df.inputFiles.map(_.split("batch_id=")(1).split("/")(0))
+      .distinct.sorted.toSeq shouldBe Seq("0", "2", "3")
+    df.select("x").as[Long].collect().sorted shouldBe Array(25L, 30L, 35L)
   }
 
   test("readTopK: order-limit fuses to TakeOrderedAndProject over the pruned scan") {

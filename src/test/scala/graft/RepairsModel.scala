@@ -80,12 +80,17 @@ object RepairsModel {
     .map(_.replace(" ", "\\s+")).mkString("(^|\\s)(", "|", ")\\s*$")
 
   /** F4: `update_name`, unless the name already ends in an image of
-    * the mapping. */
+    * the mapping. The reference splits with Python's `name.split()`,
+    * which drops surrounding whitespace of every kind, so the name is
+    * stripped of `\s` at both ends before the last token is looked up;
+    * a name whose last token is no mapping key comes back as it was. */
   def normalizeStreets(df: DataFrame): DataFrame = {
     val street = addr("street")
+    val stripped = regexp_replace(street, "^\\s+|\\s+$", "")
+    val mapped = T.normalizeStreet(stripped)
     df.withColumn("address", col("address")
       .withField("street",
-        when(street.isNotNull && !street.rlike(mappedEnding), T.normalizeStreet(street))
+        when(street.isNotNull && !street.rlike(mappedEnding) && mapped =!= stripped, mapped)
           .otherwise(street)))
   }
 

@@ -66,6 +66,19 @@ class RepairsSpec extends SparkSpec {
     addrOf(fixed, "clean") shouldBe (("Maple Street", "99203", "Spokane", "WA"))
   }
 
+  test("tab- and newline-padded streets map as the reference's name.split() does, " +
+    "at ingest and under clean alike") {
+    val fixed = Repairs.clean(mk(
+      "tab" -> (("Main St\t", "1", "99201", "Spokane", "WA")),
+      "nl" -> (("\nOak Rd.", "2", "99201", "Spokane", "WA")),
+      "kept" -> (("Elm Lane\t", "3", "99201", "Spokane", "WA"))))
+    addrOf(fixed, "tab")._1 shouldBe "Main Street"
+    addrOf(fixed, "nl")._1 shouldBe "Oak Road"
+    addrOf(fixed, "kept")._1 shouldBe "Elm Lane\t" // no mapping key: left as it was
+    T.updateName("Main St\t") shouldBe "Main Street"
+    T.updateName("\nOak Rd.") shouldBe "Oak Road"
+  }
+
   test("clean is idempotent: a repaired snapshot passes through unchanged") {
     val dirty = mk(
       "a" -> (("Main St", "1", "Spokane, WA 99218", null, null)),
