@@ -56,11 +56,13 @@ object TextFunctions {
 
   /** `update_name` (data.py:110-118): replace the LAST whitespace token
     * iff it is a key of `mapping`; otherwise return the name unchanged.
+    * Tokens split like [[updateName]]: whitespace of every kind at both
+    * ends is stripped first, so "Main St\t" maps as "Main St" does.
     * Expressed with split / slice / concat_ws + a literal map lookup —
     * no UDF, so it survives codegen and is usable in SQL.
     */
   def normalizeStreet(name: Column, mapping: Map[String, String] = streetMapping): Column = {
-    val parts = split(trim(name), "\\s+")
+    val parts = split(regexp_replace(name, "^\\s+|\\s+$", ""), "\\s+")
     val last = element_at(parts, -1)
     val replaced = element_at(typedLit(mapping), last)
     val head = slice(parts, lit(1), size(parts) - lit(1))

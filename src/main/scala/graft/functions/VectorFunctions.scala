@@ -31,15 +31,6 @@ object VectorFunctions {
     when(d > 0, dot(a, b) / d).otherwise(lit(0.0))
   }
 
-  /** Squared L2 distance. */
-  def l2Squared(a: Column, b: Column): Column =
-    aggregate(
-      zip_with(a, b, (x, y) => {
-        val diff = x.cast("double") - y.cast("double")
-        diff * diff
-      }),
-      lit(0.0), (acc, v) => acc + v)
-
   /** Signed-random-projection (hyperplane) LSH signature: `bits` sign
     * bits packed into a Long. Hyperplane h_i components are derived
     * deterministically from xxhash64(seed, i, j) — no stored model, so

@@ -30,35 +30,18 @@ import org.apache.spark.util.sketch.CountMinSketch
   */
 object CountMinTable {
 
-  /** One CMS of `valCol` (as string) per `keyCol` group — the
-    * map-side-combine hot-path shape: a mutable sketch per
-    * (key × partition), no per-row serialize; per-partition sketches
-    * shuffle (depth×width longs per key per partition, map-side
-    * combined by construction) and merge per key. */
+  /** One CMS of `valCol` (as string) per `keyCol` group: Spark's
+    * `count_min_sketch` aggregate, which builds the same
+    * `CountMinSketch.create(eps, confidence, seed)` and adds each
+    * value's UTF-8 bytes, as `addString` does (CountMinTableSpec pins
+    * the bytes). Partial sketches combine map-side and merge per key. */
   def sketchRows(df: DataFrame, keyCol: String, valCol: String,
                  eps: Double = 1e-3, confidence: Double = 0.99,
-                 seed: Int = 42): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    df.select(col(keyCol).cast("string"), col(valCol).cast("string"))
-      .filter(col(keyCol).isNotNull && col(valCol).isNotNull)
-      .as[(String, String)]
-      .mapPartitions { it =>
-        val sks = scala.collection.mutable.HashMap.empty[String, CountMinSketch]
-        it.foreach { case (k, v) =>
-          sks.getOrElseUpdate(k, CountMinSketch.create(eps, confidence, seed))
-            .addString(v)
-        }
-        sks.iterator.map { case (k, sk) => (k, sk.toByteArray) }
-      }
-      .groupByKey(_._1)
-      .mapGroups { (key, rows) =>
-        val merged = rows.map(r => CountMinSketch.readFrom(r._2))
-          .reduce((a, b) => { a.mergeInPlace(b); a })
-        (key, merged.toByteArray)
-      }
-      .toDF("key", "sketch")
-  }
+                 seed: Int = 42): DataFrame =
+    df.select(col(keyCol).cast("string").as("key"), col(valCol).cast("string").as("value"))
+      .filter(col("key").isNotNull && col("value").isNotNull)
+      .groupBy("key")
+      .agg(count_min_sketch(col("value"), lit(eps), lit(confidence), lit(seed)).as("sketch"))
 
   /** Fresh build as the reserved batch -1 — a table reset, manifest
     * republished if the table was snapshot-enabled (the
@@ -95,13 +78,9 @@ object CountMinTable {
                      items: Seq[String]): DataFrame = {
     require(items.nonEmpty, "no items to estimate")
     import spark.implicits._
-    Snapshot.read(spark, path)
-      .select(col("key").cast("string"), col("sketch"))
-      .as[(String, Array[Byte])]
-      .groupByKey(_._1)
-      .flatMapGroups { (key, rows) =>
-        val merged = rows.map(r => CountMinSketch.readFrom(r._2))
-          .reduce((a, b) => { a.mergeInPlace(b); a })
+    mergedSketches(spark, path)
+      .flatMap { case (key, bytes) =>
+        val merged = CountMinSketch.readFrom(bytes)
         items.iterator.map(i => (key, i, merged.estimateCount(i)))
       }
       .toDF("key", "item", "estimate")

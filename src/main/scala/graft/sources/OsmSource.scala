@@ -1,13 +1,19 @@
 package graft.sources
 
-import java.io.StringReader
+import java.io.InputStream
+import java.nio.charset.StandardCharsets.UTF_8
 import java.sql.Timestamp
 import java.time.Instant
 import javax.xml.stream.{XMLInputFactory, XMLStreamConstants, XMLStreamReader}
 
 import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{Path => HPath}
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.sql.catalyst.util.{ArrayBasedMapData, DateTimeUtils, GenericArrayData}
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
 
 /** OSM XML ingest (SURVEY.md §2.1 S1-S3): the reference's streaming
   * `ET.iterparse` ETL (/root/reference/ProjectCodeUsed/data.py:188-201)
@@ -16,12 +22,14 @@ import org.apache.spark.sql.functions._
   *
   * Execution shape: one ingest path, the DataSourceV2 reader
   * [[OsmXmlSource]]. The driver lists the input files and cuts each
-  * into byte ranges (metadata only); each task aligns its range to
-  * element boundaries ([[parseRange]]) and StAX-pulls the elements
-  * whose start byte it owns — the reference's single iterparse pass,
-  * range-parallel, so one monolithic planet.xml and many sharded
-  * extracts parallelize alike with no landing rewrite. Everything
-  * downstream of this source is columnar parquet.
+  * into byte ranges (metadata only); each task streams its range,
+  * aligned to element boundaries ([[RangeStream]]), through one StAX
+  * pass that writes the requested columns of every element it owns
+  * straight into a row ([[parseRows]]) — the reference's single
+  * constant-memory iterparse pass, range-parallel, so one monolithic
+  * planet.xml and many sharded extracts parallelize alike with no
+  * landing rewrite. No range, file or element is held whole as text.
+  * Everything downstream of this source is columnar parquet.
   *
   * Shaping semantics mirror `shape_element`
   * (ProjectCodeUsed/data.py:120-185):
@@ -70,17 +78,26 @@ object OsmSource {
   private val problemChars = "[=\\+/&<>;'\"\\?%#$@,\\. \t\r\n]".r
   private val lowerColon = "^([a-z]|_)*:([a-z]|_)*$".r
 
-  private val addressFields = Set("street", "housenumber", "postcode", "city", "state")
+  /** The `address` struct's fields, in its order. */
+  private val addressFields = Seq("street", "housenumber", "postcode", "city", "state")
   private val promotedKeys = Seq("amenity", "natural", "place", "name", "population")
 
   /** S2 — element-type histogram (mapparser.py:16-21): count of every
-    * XML tag name in the file(s), as a DataFrame. */
+    * XML tag name in the file(s), as a DataFrame. Each file streams
+    * through one StAX pass that counts its names; the per-file counts
+    * then add up. */
   def tagHistogram(spark: SparkSession, path: String): DataFrame = {
     import spark.implicits._
-    spark.sparkContext.wholeTextFiles(path)
-      .flatMap { case (_, xml) => tagNames(xml) }
-      .toDF("xml_tag")
-      .groupBy("xml_tag").agg(count(lit(1)).as("cnt"))
+    spark.sparkContext.binaryFiles(path)
+      .flatMap { case (_, file) =>
+        val counts = scala.collection.mutable.HashMap.empty[String, Long]
+        val in = file.open()
+        try tagNames(in).foreach(n => counts(n) = counts.getOrElse(n, 0L) + 1)
+        finally in.close()
+        counts
+      }
+      .toDF("xml_tag", "cnt")
+      .groupBy("xml_tag").agg(sum("cnt").as("cnt"))
       .orderBy("xml_tag")
   }
 
@@ -135,17 +152,15 @@ object OsmSource {
   def writeParquet(ds: Dataset[OsmElement], path: String): Unit =
     ds.write.mode("overwrite").partitionBy("type").parquet(path)
 
-  /** Each task buffers its range in memory, so splits are capped well
-    * under Int.MaxValue (a >2 GiB range would also be a terrible task
-    * granularity); [[parseRange]]'s range length is then an exact Int. */
-  private[sources] val MaxSplitBytes: Long = 512L * 1024 * 1024
-
   private val topLevelNames = Seq("node", "way", "relation")
+
+  /** Bytes [[isTopLevelStart]] may look at: '<', the longest name and
+    * the delimiter after it. */
+  private val StartLookahead = topLevelNames.map(_.length).max + 2
 
   /** Is `buf(pos)` the '<' of a top-level element start tag? STRICT:
     * the delimiter byte after the name must be visible in [pos, end) —
-    * a candidate truncated at a scan-window edge therefore defers to
-    * the next (overlapped) window instead of matching early. */
+    * a candidate truncated at `end` is no match. */
   private def isTopLevelStart(buf: Array[Byte], pos: Int, end: Int): Boolean = {
     if (buf(pos) != '<') return false
     topLevelNames.exists { n =>
@@ -160,15 +175,27 @@ object OsmSource {
     }
   }
 
-  /** Executor-side range parse for [[OsmXmlSource]]: reads
-    * [start, end) plus the read-ahead needed to complete the last
-    * owned element, returns the shaped elements whose start byte falls
-    * in the range — the range aligns forward to its first top-level
-    * element START and parses until the first top-level start at/after
-    * its end, so every element is parsed exactly once, by the range
-    * containing its start byte. Tail alignment scans each newly read
-    * chunk with a 16-byte overlap window — no per-chunk copy of the
-    * whole buffer.
+  /** Opens `path` at `start` as the [[RangeStream]] of [start, end). */
+  private[sources] def openRange(path: String, start: Long, end: Long,
+                                 conf: Configuration): InputStream = {
+    // getFileSystem off the Path itself — java.net.URI(path) throws on
+    // paths needing escaping (spaces etc.)
+    val hPath = new HPath(path)
+    val in = hPath.getFileSystem(conf).open(hPath)
+    try in.seek(start) catch { case t: Throwable => in.close(); throw t }
+    new RangeStream(in, start, end)
+  }
+
+  /** The bytes one [[OsmXmlSource]] task parses for its range
+    * [start, end) of an OSM file, as a document of their own: a
+    * synthetic `<osm>`, then the file from the first top-level element
+    * start inside the range up to the first top-level start at or after
+    * `end` (or EOF), then `</osm>`. So every element is parsed exactly
+    * once, by the range containing its start byte, and a range holding
+    * no start reads as `<osm></osm>`. The final range carries the
+    * document's own `</osm>`, which closes the synthetic root;
+    * [[parseRows]] stops there and never reads the second close. A
+    * file whose root close is missing parses all the same.
     *
     * Alignment is a byte-level scan for `<node` / `<way` / `<relation`
     * followed by a delimiter: in well-formed XML a raw '<' cannot
@@ -176,95 +203,91 @@ object OsmSource {
     * OSM's nested children are only nd/tag/member, so the name match
     * alone identifies top level. (Caveat, documented not defended: an
     * XML comment containing literal "<node " would confuse the
-    * aligner; OSM planet dumps contain no comments.) */
-  private[sources] def parseRange(path: String, start: Long, end: Long,
-                                  cleanStreets: Boolean,
-                                  includeRelations: Boolean,
-                                  conf: Configuration): Iterator[OsmElement] = {
-    import org.apache.hadoop.fs.{Path => HPath}
-    // getFileSystem off the Path itself — java.net.URI(path) throws on
-    // paths needing escaping (spaces etc.)
-    val hPath = new HPath(path)
-    val fs = hPath.getFileSystem(conf)
-    val in = fs.open(hPath)
-    try {
-      in.seek(start)
-      val base = math.toIntExact(end - start) // ranges cap at MaxSplitBytes
-      val bos = new java.io.ByteArrayOutputStream(base + 1024)
-      val chunk = new Array[Byte](1 << 20)
-      // read the range itself
-      var remaining = base
-      var eof = false
-      while (remaining > 0 && !eof) {
-        val n = in.read(chunk, 0, math.min(chunk.length, remaining))
-        if (n < 0) eof = true else { bos.write(chunk, 0, n); remaining -= n }
-      }
-      // read ahead until the first top-level start at/after the range
-      // end (elements are small — ways cap at ~2k nd refs — so this
-      // tail is a few KB in practice, bounded by one element's size).
-      // Scan window = 16-byte overlap + new chunk, so a tag spanning a
-      // chunk boundary is re-scanned; matches needing bytes beyond the
-      // window defer to the next round.
-      val Overlap = 16
-      var tailStart = -1L
-      var overlap = Array.emptyByteArray
-      while (tailStart < 0 && !eof) {
-        val sizeBefore = bos.size()
-        val n = in.read(chunk)
-        if (n < 0) eof = true
-        else {
-          bos.write(chunk, 0, n)
-          val window = new Array[Byte](overlap.length + n)
-          System.arraycopy(overlap, 0, window, 0, overlap.length)
-          System.arraycopy(chunk, 0, window, overlap.length, n)
-          val windowStartAbs = sizeBefore.toLong - overlap.length
-          // scan the FULL window: a complete tag is accepted where it
-          // stands; a tag truncated at the window edge fails
-          // isTopLevelStart's bounds check here and is re-scanned via
-          // the overlap bytes next round
-          var p = 0
-          while (tailStart < 0 && p < window.length) {
-            if (windowStartAbs + p >= base && isTopLevelStart(window, p, window.length))
-              tailStart = windowStartAbs + p
-            else p += 1
-          }
-          overlap = window.takeRight(math.min(Overlap - 1, window.length))
+    * aligner; OSM planet dumps contain no comments.) Only the bytes
+    * before the first start and from `end` on are scanned, each with
+    * [[StartLookahead]] bytes in view; the rest pass through one 64 KiB
+    * buffer. `in` is positioned at `start`; closing this stream closes
+    * it. */
+  private[graft] final class RangeStream(in: InputStream, start: Long, end: Long)
+      extends InputStream {
+    private val buf = new Array[Byte](1 << 16)
+    private var pos = 0            // next byte of buf to hand out
+    private var lim = 0            // end of the file bytes in buf
+    private var bufStart = start   // file offset of buf(0)
+    private var eof = false
+    private val rootOpen = "<osm>".getBytes(UTF_8)
+    private val rootClose = "</osm>".getBytes(UTF_8)
+    private var phase = 0          // 0: rootOpen, 1: file bytes, 2: rootClose
+    private var sent = 0           // bytes of rootOpen / rootClose handed out
+    private val one = new Array[Byte](1)
+
+    /** Makes `n` bytes visible from `pos`, unless the file ends first. */
+    private def fill(n: Int): Unit =
+      if (lim - pos < n && !eof) {
+        System.arraycopy(buf, pos, buf, 0, lim - pos)
+        bufStart += pos; lim -= pos; pos = 0
+        while (lim < n && !eof) {
+          val r = in.read(buf, lim, buf.length - lim)
+          if (r < 0) eof = true else lim += r
         }
       }
-      val buf = bos.toByteArray
-      val stop = if (tailStart >= 0) tailStart.toInt else buf.length
-      // first top-level start INSIDE the range — this split's first element
-      var first = -1
-      var p = 0
-      while (first < 0 && p < math.min(base, stop)) {
-        if (isTopLevelStart(buf, p, buf.length)) first = p
-        else p += 1
-      }
-      if (first < 0) Iterator.empty
+
+    /** Moves to the first top-level start inside [start, end); false
+      * when the range holds none. */
+    private def align(): Boolean = {
+      var found = false
+      while (!found && bufStart + pos < end && { fill(StartLookahead); pos < lim })
+        if (isTopLevelStart(buf, pos, lim)) found = true else pos += 1
+      found
+    }
+
+    private def emit(src: Array[Byte], b: Array[Byte], off: Int, len: Int): Int =
+      if (sent == src.length) -1
       else {
-        var frag = new String(buf, first, stop - first, java.nio.charset.StandardCharsets.UTF_8)
-        // final split: trim the document's own root close tag
-        val rootClose = frag.lastIndexOf("</osm>")
-        if (tailStart < 0 && rootClose >= 0) frag = frag.substring(0, rootClose)
-        parseElements(s"<osm>$frag</osm>", cleanStreets, includeRelations)
+        val n = math.min(len, src.length - sent)
+        System.arraycopy(src, sent, b, off, n)
+        sent += n
+        n
       }
-    } finally in.close()
+
+    override def read(b: Array[Byte], off: Int, len: Int): Int =
+      if (len == 0) 0
+      else if (phase == 0) {
+        val n = emit(rootOpen, b, off, len)
+        if (sent == rootOpen.length) { sent = 0; phase = if (align()) 1 else 2 }
+        n
+      } else if (phase == 1) {
+        fill(StartLookahead)
+        val avail = math.min(len, lim - pos)
+        // bytes before `end` pass as they are; from `end` on, every
+        // position with its lookahead in view is checked for a start
+        var n = math.min(avail.toLong, math.max(0L, end - (bufStart + pos))).toInt
+        val scanTo = math.min(avail, if (eof) lim - pos else lim - pos - StartLookahead + 1)
+        while (n < scanTo && !isTopLevelStart(buf, pos + n, lim)) n += 1
+        if (avail == 0 || n < scanTo) phase = 2 // EOF, or the next range's first start
+        if (n == 0) read(b, off, len)
+        else { System.arraycopy(buf, pos, b, off, n); pos += n; n }
+      } else emit(rootClose, b, off, len)
+
+    override def read(): Int = if (read(one, 0, 1) < 0) -1 else one(0) & 0xff
+
+    override def close(): Unit = in.close()
   }
 
   // -------------------------------------------------------------------
-  // StAX parsing (executor-side, one range in memory at a time)
+  // StAX parsing (executor-side, streaming)
   // -------------------------------------------------------------------
 
-  private def newReader(xml: String): XMLStreamReader = {
+  private def newReader(in: InputStream): XMLStreamReader = {
     val f = XMLInputFactory.newInstance()
     f.setProperty(XMLInputFactory.SUPPORT_DTD, false)
     f.setProperty(XMLInputFactory.IS_SUPPORTING_EXTERNAL_ENTITIES, false)
-    f.createXMLStreamReader(new StringReader(xml))
+    f.createXMLStreamReader(in)
   }
 
-  /** All element names in document order (for the S2 histogram). */
-  private[sources] def tagNames(xml: String): Iterator[String] = {
-    val r = newReader(xml)
+  /** All element names of one document in order (for the S2 histogram). */
+  private[sources] def tagNames(in: InputStream): Iterator[String] = {
+    val r = newReader(in)
     new Iterator[String] {
       private var nextName: String = advance()
       private def advance(): String = {
@@ -279,123 +302,149 @@ object OsmSource {
     }
   }
 
-  /** Incremental pull-parse: yields one shaped OsmElement per
-    * `<node>`/`<way>` (and `<relation>` when `includeRelations`);
-    * everything else skips. Over a whole document it is the reference
-    * the range reader is tested against. */
-  private[graft] def parseElements(xml: String, cleanStreets: Boolean,
-                                     includeRelations: Boolean = false): Iterator[OsmElement] = {
-    val r = newReader(xml)
-    new Iterator[OsmElement] {
-      private var nextEl: OsmElement = advance()
-      private def advance(): OsmElement = {
-        while (r.hasNext) {
-          if (r.next() == XMLStreamConstants.START_ELEMENT) {
-            val tag = r.getLocalName
-            if (tag == "node" || tag == "way" ||
-                (includeRelations && tag == "relation")) return parseOne(r, tag)
-          }
-        }
-        null
+  /** Incremental pull-parse of an OSM document — a whole file, or a
+    * task's [[RangeStream]] — straight into Catalyst rows of `fields`
+    * (names of [[OsmXmlSource.schema]], in any order): one row per
+    * `<node>`/`<way>` (and `<relation>` when `includeRelations`), read
+    * in one pass over its attributes and children, with only the
+    * requested columns built. Everything else skips, and the parse
+    * stops at the root's end element.
+    *
+    * The values are the `OsmElement` encoder's: `UTF8String`s, nested
+    * `GenericInternalRow`s, `GenericArrayData`, and `ArrayBasedMapData`
+    * for `tags`, whose entries keep the iteration order of the
+    * immutable `Map` the tags make in document order (OsmSourceSpec
+    * pins the rows against the encoder's). Each element gets a fresh
+    * row: DSv2 consumers may hold rows. */
+  private[graft] def parseRows(in: InputStream, fields: Array[String],
+                               cleanStreets: Boolean,
+                               includeRelations: Boolean): Iterator[InternalRow] = {
+    val r = newReader(in)
+    val Array(iId, iType, iVisible, iPos, iCreated, iAddress, iNodeRefs, iMembers, iTags) =
+      Array("id", "type", "visible", "pos", "created", "address", "node_refs", "members", "tags")
+        .map(fields.indexOf(_))
+    val iPromoted = promotedKeys.map(fields.indexOf(_))
+    val children = scala.collection.mutable.ArrayBuffer.empty[Any] // node_refs or members
+
+    def str(s: String): UTF8String = UTF8String.fromString(s) // null stays null
+    def struct(values: Any*): InternalRow = new GenericInternalRow(values.toArray)
+    def attrValue(name: String): String = {
+      var i = 0
+      while (i < r.getAttributeCount) {
+        if (r.getAttributeLocalName(i) == name) return r.getAttributeValue(i)
+        i += 1
       }
-      def hasNext: Boolean = nextEl != null
-      def next(): OsmElement = { val e = nextEl; nextEl = advance(); e }
+      null
+    }
 
-      /** Reads attributes of the current start element, then consumes
-        * children until the matching end element. */
-      private def parseOne(r: XMLStreamReader, tag: String): OsmElement = {
-        val attrs = (0 until r.getAttributeCount)
-          .map(i => r.getAttributeLocalName(i) -> r.getAttributeValue(i)).toMap
+    /** The row of the current start element; consumes its children up
+      * to the matching end element. */
+    def parseOne(tag: String): InternalRow = {
+      val row = new GenericInternalRow(fields.length)
+      def put(i: Int, s: String): Unit = if (i >= 0) row.update(i, str(s))
+      put(iType, tag)
+      var lat, lon, version, changeset, timestamp, user, uid: String = null
+      var i = 0
+      while (i < r.getAttributeCount) {
+        val v = r.getAttributeValue(i)
+        r.getAttributeLocalName(i) match {
+          case "id" => put(iId, v)
+          case "visible" => put(iVisible, v)
+          case "lat" => lat = v
+          case "lon" => lon = v
+          case "version" => version = v
+          case "changeset" => changeset = v
+          case "timestamp" => timestamp = v
+          case "user" => user = v
+          case "uid" => uid = v
+          case _ =>
+        }
+        i += 1
+      }
+      if (iPos >= 0 && lat != null && lon != null) row.update(iPos, struct(lat.toDouble, lon.toDouble))
+      if (iCreated >= 0 && (version != null || changeset != null || timestamp != null ||
+          user != null || uid != null))
+        row.update(iCreated, struct(str(version), str(changeset),
+          if (timestamp == null) null
+          else DateTimeUtils.fromJavaTimestamp(Timestamp.from(Instant.parse(timestamp))),
+          str(user), str(uid)))
 
-        val pos =
-          if (attrs.contains("lat") && attrs.contains("lon"))
-            OsmPos(attrs("lat").toDouble, attrs("lon").toDouble)
-          else null
-        val created =
-          if (Seq("version", "changeset", "timestamp", "user", "uid").exists(attrs.contains))
-            OsmCreated(
-              attrs.getOrElse("version", null), attrs.getOrElse("changeset", null),
-              attrs.get("timestamp").map(t => Timestamp.from(Instant.parse(t))).orNull,
-              attrs.getOrElse("user", null), attrs.getOrElse("uid", null))
-          else null
+      children.clear()
+      var address: Array[Any] = null
+      var tags = Map.empty[String, String]
+      var depth = 1
+      while (r.hasNext && depth > 0) {
+        r.next() match {
+          case XMLStreamConstants.START_ELEMENT =>
+            depth += 1
+            r.getLocalName match {
+              case "nd" if tag == "way" && iNodeRefs >= 0 =>
+                val ref = attrValue("ref")
+                if (ref != null) children += str(ref)
+              case "member" if tag == "relation" && iMembers >= 0 =>
+                val ref = attrValue("ref")
+                if (ref != null)
+                  children += struct(str(attrValue("type")), str(ref), str(attrValue("role")))
+              case "tag" =>
+                val k = attrValue("k")
+                val v = attrValue("v")
+                if (k != null && v != null) {
+                  if (k.startsWith("addr:")) {
+                    val key = k.substring(5)
+                    val j = addressFields.indexOf(key)
+                    if (j >= 0) {
+                      if (iAddress >= 0) {
+                        if (address == null) address = new Array[Any](addressFields.length)
+                        address(j) = str(
+                          if (key == "street" && cleanStreets) graft.functions.TextFunctions.updateName(v)
+                          else v)
+                      }
+                    } else if (iTags >= 0 && problemChars.findFirstIn(key).isEmpty &&
+                        lowerColon.findFirstMatchIn(key).isEmpty)
+                      tags += k -> v // fixed-schema overflow; problemchars / second-colon keys drop (data.py:158-162)
+                  } else {
+                    if (iTags >= 0) tags += k -> v
+                    val j = promotedKeys.indexOf(k)
+                    if (j >= 0 && iPromoted(j) >= 0) row.update(iPromoted(j), str(v))
+                  }
+                }
+              case _ =>
+            }
+          case XMLStreamConstants.END_ELEMENT => depth -= 1
+          case _ =>
+        }
+      }
 
-        var nodeRefs = List.empty[String]
-        var members = List.empty[OsmMember]
-        var address = Map.empty[String, String]
-        var tags = Map.empty[String, String]
-        var depth = 1
-        while (r.hasNext && depth > 0) {
+      if (address != null) row.update(iAddress, new GenericInternalRow(address))
+      if (children.nonEmpty)
+        row.update(if (tag == "way") iNodeRefs else iMembers, new GenericArrayData(children.toArray))
+      if (iTags >= 0)
+        row.update(iTags, ArrayBasedMapData(tags, k => str(k.asInstanceOf[String]),
+          v => str(v.asInstanceOf[String])))
+      row
+    }
+
+    new Iterator[InternalRow] {
+      private var depth = 0
+      private var nextRow: InternalRow = advance()
+      private def advance(): InternalRow = {
+        while (r.hasNext) {
           r.next() match {
             case XMLStreamConstants.START_ELEMENT =>
+              val tag = r.getLocalName
+              if (tag == "node" || tag == "way" ||
+                  (includeRelations && tag == "relation")) return parseOne(tag)
               depth += 1
-              r.getLocalName match {
-                case "nd" =>
-                  val ref = attrValue(r, "ref")
-                  if (ref != null) nodeRefs ::= ref
-                case "member" =>
-                  val ref = attrValue(r, "ref")
-                  if (ref != null)
-                    members ::= OsmMember(attrValue(r, "type"), ref,
-                      attrValue(r, "role"))
-                case "tag" =>
-                  val k = attrValue(r, "k")
-                  val v = attrValue(r, "v")
-                  if (k != null && v != null) {
-                    if (k.startsWith("addr:")) {
-                      val key = k.substring(5)
-                      // drop problemchars / second-colon keys (data.py:158-162)
-                      if (problemChars.findFirstIn(key).isEmpty &&
-                          lowerColon.findFirstMatchIn(key).isEmpty) {
-                        val value =
-                          if (key == "street" && cleanStreets)
-                            graft.functions.TextFunctions.updateName(v)
-                          else v
-                        if (addressFields.contains(key)) address += key -> value
-                        else tags += k -> value // fixed-schema overflow
-                      }
-                    } else tags += k -> v
-                  }
-                case _ =>
-              }
-            case XMLStreamConstants.END_ELEMENT => depth -= 1
+            case XMLStreamConstants.END_ELEMENT =>
+              depth -= 1
+              if (depth == 0) return null // the root's end: whatever follows stays unread
             case _ =>
           }
         }
-
-        val addr =
-          if (address.nonEmpty)
-            OsmAddress(address.getOrElse("street", null),
-              address.getOrElse("housenumber", null),
-              address.getOrElse("postcode", null),
-              address.getOrElse("city", null),
-              address.getOrElse("state", null))
-          else null
-
-        OsmElement(
-          id = attrs.getOrElse("id", null),
-          `type` = tag,
-          visible = attrs.getOrElse("visible", null),
-          pos = pos,
-          created = created,
-          address = addr,
-          node_refs = if (tag == "way" && nodeRefs.nonEmpty) nodeRefs.reverse else null,
-          members = if (tag == "relation" && members.nonEmpty) members.reverse else null,
-          tags = tags,
-          amenity = tags.getOrElse("amenity", null),
-          natural = tags.getOrElse("natural", null),
-          place = tags.getOrElse("place", null),
-          name = tags.getOrElse("name", null),
-          population = tags.getOrElse("population", null))
-      }
-
-      private def attrValue(r: XMLStreamReader, name: String): String = {
-        var i = 0
-        while (i < r.getAttributeCount) {
-          if (r.getAttributeLocalName(i) == name) return r.getAttributeValue(i)
-          i += 1
-        }
         null
       }
+      def hasNext: Boolean = nextRow != null
+      def next(): InternalRow = { val row = nextRow; nextRow = advance(); row }
     }
   }
 }

@@ -9,8 +9,6 @@ import org.apache.hadoop.fs.{FileStatus, Path => HPath}
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{Encoders, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-import org.apache.spark.sql.catalyst.util.{ArrayBasedMapData, DateTimeUtils, GenericArrayData}
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader,
@@ -18,7 +16,6 @@ import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionRead
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
-import org.apache.spark.unsafe.types.UTF8String
 import org.apache.spark.util.SerializableConfiguration
 
 /** DataSourceV2 TableProvider for OSM XML — the one ingest path
@@ -34,27 +31,27 @@ import org.apache.spark.util.SerializableConfiguration
   *
   * Split planning is DRIVER-side metadata only (file listing + byte
   * ranges); each InputPartition aligns itself to element boundaries
-  * executor-side via [[OsmSource.parseRange]] — a monolithic planet.xml
+  * executor-side via [[OsmSource.RangeStream]] — a monolithic planet.xml
   * parallelizes across the cluster on first touch, and many files fan
   * out file×range wide. Without `splitBytes` the range size follows
   * Spark's file-source rule, `min(spark.sql.files.maxPartitionBytes,
   * max(spark.sql.files.openCostInBytes, totalBytes /
   * defaultParallelism))`, so an input a few times the open cost still
-  * spreads over every core, while a small one stays one task. Schema
-  * is the fixed [[OsmSource.OsmElement]] shape.
+  * spreads over every core, while a small one stays one task. A task
+  * streams its range, so a range's size bounds its time, not its
+  * memory. Schema is the fixed [[OsmSource.OsmElement]] shape.
   *
   * TOP-LEVEL column pruning IS implemented
   * (SupportsPushDownRequiredColumns): XML parse cost is unavoidable —
-  * every byte is scanned regardless — but the rows handed to Spark
-  * carry only the projected columns, so a `select(id, amenity)` over a
-  * planet-scale scan builds 2 fields per element instead of 14. The
-  * reader builds each `InternalRow` itself from the parsed element
-  * ([[OsmXmlSource.columns]]: `UTF8String`s, nested
-  * `GenericInternalRow`s, `GenericArrayData`, `ArrayBasedMapData`), so
-  * no encoder serializer is built per task and no row is copied; the
-  * values equal the `OsmElement` encoder's (OsmSourceSpec pins it).
-  * Nested pruning is left to Catalyst's Project above the scan — the
-  * pruned read schema keeps each requested top-level field's full type.
+  * every byte is scanned regardless — but the parser builds only the
+  * projected columns, so a `select(id, amenity)` over a planet-scale
+  * scan makes 2 fields per element instead of 14 and never assembles
+  * tags, node refs or timestamps. The StAX pass writes each
+  * `InternalRow` itself ([[OsmSource.parseRows]]), so no encoder
+  * serializer is built per task and no row is copied; the values equal
+  * the `OsmElement` encoder's (OsmSourceSpec pins it). Nested pruning
+  * is left to Catalyst's Project above the scan — the pruned read
+  * schema keeps each requested top-level field's full type.
   * Filter pushdown stays unimplemented: there is no sub-file statistic
   * to skip by; filtering happens one hop later at the parquet landing
   * table.
@@ -69,52 +66,7 @@ class OsmXmlSource extends TableProvider {
 }
 
 object OsmXmlSource {
-  import OsmSource.OsmElement
-
-  val schema: StructType = Encoders.product[OsmElement].schema
-
-  private def str(s: String): UTF8String = UTF8String.fromString(s) // null stays null
-
-  private def struct(values: Any*): InternalRow = new GenericInternalRow(values.toArray)
-
-  private def array[A](xs: Seq[A])(f: A => Any): GenericArrayData =
-    if (xs == null) null else new GenericArrayData(xs.iterator.map(f).toArray)
-
-  /** Each top-level column's Catalyst value of an element, keyed by
-    * field name; [[schema]] fixes the types. Map entries keep the
-    * element map's iteration order, as the encoder's do. */
-  private[sources] val columns: Map[String, OsmElement => Any] = Map(
-    "id" -> (e => str(e.id)),
-    "type" -> (e => str(e.`type`)),
-    "visible" -> (e => str(e.visible)),
-    "pos" -> (e => if (e.pos == null) null else struct(e.pos.lat, e.pos.lon)),
-    "created" -> { e =>
-      val c = e.created
-      if (c == null) null
-      else struct(str(c.version), str(c.changeset),
-        if (c.timestamp == null) null else DateTimeUtils.fromJavaTimestamp(c.timestamp),
-        str(c.user), str(c.uid))
-    },
-    "address" -> { e =>
-      val a = e.address
-      if (a == null) null
-      else struct(str(a.street), str(a.housenumber), str(a.postcode), str(a.city), str(a.state))
-    },
-    "node_refs" -> (e => array(e.node_refs)(str)),
-    "members" -> (e => array(e.members)(m => struct(str(m.member_type), str(m.ref), str(m.role)))),
-    "tags" -> { e =>
-      if (e.tags == null) null
-      else {
-        val (keys, values) = e.tags.toArray.unzip
-        new ArrayBasedMapData(new GenericArrayData(keys.map(str)),
-          new GenericArrayData(values.map(str)))
-      }
-    },
-    "amenity" -> (e => str(e.amenity)),
-    "natural" -> (e => str(e.natural)),
-    "place" -> (e => str(e.place)),
-    "name" -> (e => str(e.name)),
-    "population" -> (e => str(e.population)))
+  val schema: StructType = Encoders.product[OsmSource.OsmElement].schema
 }
 
 private[sources] class OsmXmlTable(options: CaseInsensitiveStringMap)
@@ -144,8 +96,7 @@ private[sources] class OsmScanBuilder(options: CaseInsensitiveStringMap)
       .filter(_.nonEmpty)
       .getOrElse(throw new IllegalArgumentException("osmxml: path is required"))
   private val splitBytesOption = Option(options.get("splitBytes")).map(_.toLong)
-  splitBytesOption.foreach(b => require(b > 0 && b <= OsmSource.MaxSplitBytes,
-    s"osmxml: splitBytes must be in (0, ${OsmSource.MaxSplitBytes}]"))
+  splitBytesOption.foreach(b => require(b > 0, s"osmxml: splitBytes must be positive: $b"))
   private val cleanStreets = Option(options.get("cleanStreets")).forall(_.toBoolean)
   private val includeRelations = Option(options.get("includeRelations")).exists(_.toBoolean)
 
@@ -192,8 +143,7 @@ private[sources] class OsmScanBuilder(options: CaseInsensitiveStringMap)
     // defaultParallelism ranges rather than gaining a few-byte sliver
     val cores = spark.sparkContext.defaultParallelism
     val perCore = (files.map(_.getLen).sum + cores - 1) / cores
-    val rule = math.min(sql.filesMaxPartitionBytes, math.max(sql.filesOpenCostInBytes, perCore))
-    math.max(1L, math.min(rule, OsmSource.MaxSplitBytes))
+    math.max(1L, math.min(sql.filesMaxPartitionBytes, math.max(sql.filesOpenCostInBytes, perCore)))
   }
 
   override def planInputPartitions(): Array[InputPartition] =
@@ -224,20 +174,15 @@ private[sources] class OsmReaderFactory(requiredFields: Array[String],
     extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
     val p = partition.asInstanceOf[OsmRangePartition]
-    val columns = requiredFields.map(OsmXmlSource.columns)
+    val in = OsmSource.openRange(p.path, p.start, p.end, conf.value.value)
+    val rows =
+      try OsmSource.parseRows(in, requiredFields, cleanStreets, includeRelations)
+      catch { case t: Throwable => in.close(); throw t }
     new PartitionReader[InternalRow] {
-      private val iter = OsmSource.parseRange(p.path, p.start, p.end,
-        cleanStreets, includeRelations, conf.value.value)
       private var current: InternalRow = _
-      override def next(): Boolean = {
-        if (!iter.hasNext) return false
-        val e = iter.next()
-        // a fresh row per element: DSv2 consumers may hold rows
-        current = new GenericInternalRow(columns.map(_(e)))
-        true
-      }
+      override def next(): Boolean = rows.hasNext && { current = rows.next(); true }
       override def get(): InternalRow = current
-      override def close(): Unit = ()
+      override def close(): Unit = in.close()
     }
   }
 }

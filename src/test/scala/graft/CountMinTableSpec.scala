@@ -38,6 +38,22 @@ class CountMinTableSpec extends SparkSpec {
     estMap(path, Seq("1", "2", "9")) shouldBe e1
   }
 
+  test("the count_min_sketch aggregate's bytes equal an addString-fed sketch's") {
+    import org.apache.spark.util.sketch.CountMinSketch
+    // non-ASCII values too: both sides hash a value's UTF-8 bytes
+    val rows = fixture.select(col("event_type"), col("user_id").cast("string"))
+      .union(Seq(("view", "naïve"), ("日本", "🗺 map"), ("view", "naïve")).toDF())
+    val got = CountMinTable.sketchRows(rows.repartition(3), "event_type", "user_id",
+      eps = 1e-2, confidence = 0.95, seed = 7)
+      .collect().map(r => r.getString(0) -> r.getAs[Array[Byte]](1).toSeq).toMap
+    val want = rows.collect().groupBy(_.getString(0)).map { case (key, rs) =>
+      val sk = CountMinSketch.create(1e-2, 0.95, 7)
+      rs.foreach(r => sk.addString(r.getString(1)))
+      key -> sk.toByteArray.toSeq
+    }
+    got shouldBe want
+  }
+
   test("estimates are independent of input partitioning (counters add)") {
     val a = TempDirs.path("cms-spec/part-a")
     val b = TempDirs.path("cms-spec/part-b")

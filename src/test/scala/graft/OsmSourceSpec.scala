@@ -1,14 +1,35 @@
 package graft
 
+import java.nio.charset.StandardCharsets.UTF_8
+
+import org.apache.spark.sql.Encoders
+import org.apache.spark.sql.catalyst.encoders.{AgnosticEncoder, ExpressionEncoder}
 import org.apache.spark.sql.functions._
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
-import graft.sources.OsmSource
+import graft.sources.{OsmSource, OsmXmlSource}
 
 /** S1-S3 golden tests, reproducing every assert from the reference's
   * quiz modules on the reconstructed fixtures (OsmFixture, FIXTURES.md).
   */
 class OsmSourceSpec extends SparkSpec {
+
+  private val encoder = ExpressionEncoder(Encoders.product[OsmSource.OsmElement]
+    .asInstanceOf[AgnosticEncoder[OsmSource.OsmElement]])
+
+  /** The parser's rows over one stream, decoded with the `OsmElement`
+    * encoder. */
+  private def decoded(in: java.io.InputStream, cleanStreets: Boolean,
+                      includeRelations: Boolean): Seq[OsmSource.OsmElement] = {
+    val decode = encoder.resolveAndBind().createDeserializer()
+    OsmSource.parseRows(in, OsmXmlSource.schema.fieldNames, cleanStreets, includeRelations)
+      .map(decode).toSeq
+  }
+
+  /** The whole-document view the range reader is checked against. */
+  private def parseElements(xml: String, cleanStreets: Boolean,
+                            includeRelations: Boolean = false): Seq[OsmSource.OsmElement] =
+    decoded(new java.io.ByteArrayInputStream(xml.getBytes(UTF_8)), cleanStreets, includeRelations)
 
   test("S2 tag histogram matches mapparser.py:28-35 golden dict") {
     val p = OsmFixture.write("example.osm", OsmFixture.xml)
@@ -128,7 +149,7 @@ class OsmSourceSpec extends SparkSpec {
 </osm>
 """
     val p = OsmFixture.write("monolith.osm", body.toString)
-    val whole = OsmSource.parseElements(body.toString, cleanStreets = false,
+    val whole = parseElements(body.toString, cleanStreets = false,
       includeRelations = true).toSeq.sortBy(_.id)
     // 4 KB splits → ~dozens of ranges, elements spanning boundaries
     val dsv2 = spark.read.format("graft.sources.OsmXmlSource")
@@ -207,31 +228,97 @@ class OsmSourceSpec extends SparkSpec {
       val splitBytes = if (onStart && starts.nonEmpty) starts(pick % starts.size) else anySize
       (xml, splitBytes, cleanStreets, includeRelations)
     }
-    // 25 cases keep the spec within seconds
-    for (i <- 0 until 25) {
-      val (xml, splitBytes, cleanStreets, includeRelations) =
-        params(Gen.Parameters.default, Seed(i.toLong)).get
-      val p = OsmFixture.write(s"property/doc-$i.osm", xml)
+    def check(name: String, onDisk: String, xml: String, splitBytes: Long,
+              cleanStreets: Boolean, includeRelations: Boolean): Unit = {
+      val p = OsmFixture.write(s"property/$name.osm", onDisk)
       val got = spark.read.format("graft.sources.OsmXmlSource")
         .option("splitBytes", splitBytes.toString)
         .option("cleanStreets", cleanStreets.toString)
         .option("includeRelations", includeRelations.toString)
         .load(p.toString).as[OsmSource.OsmElement].collect().toSeq
-      val want = OsmSource.parseElements(xml, cleanStreets, includeRelations).toSeq
-      withClue(s"seed $i, splitBytes $splitBytes, ${xml.length} chars: ") {
+      val want = parseElements(xml, cleanStreets, includeRelations)
+      withClue(s"$name, splitBytes $splitBytes, ${onDisk.length} chars: ") {
         got.sortBy(e => (e.`type`, e.id)) shouldBe want.sortBy(e => (e.`type`, e.id))
+      }
+    }
+    // 25 cases keep the spec within seconds
+    for (i <- 0 until 25) {
+      val (xml, splitBytes, cleanStreets, includeRelations) =
+        params(Gen.Parameters.default, Seed(i.toLong)).get
+      check(s"doc-$i", xml, xml, splitBytes, cleanStreets, includeRelations)
+    }
+
+    // Layouts a uniform size rarely hits. The first range ends at byte
+    // `edge`: inside an attribute value, inside a multi-byte UTF-8
+    // character, in or just before the root's close tag, or right after
+    // an element's last byte; or every range is one byte long. Each
+    // layout also runs on the file without its trailing newline and
+    // without its root close tag, which the reader must not need.
+    def offsets(bytes: Array[Byte], regex: String, group: Int, atEnd: Boolean): Seq[Int] = {
+      val text = new String(bytes, "ISO-8859-1") // one char per byte
+      regex.r.findAllMatchIn(text).map(m => if (atEnd) m.end(group) else m.start(group)).toSeq
+    }
+    val layouts = Seq[(String, Array[Byte] => Seq[Int])](
+      "in-value" -> { b =>
+        val r = "=\"([^\"]*)\"".r
+        r.findAllMatchIn(new String(b, "ISO-8859-1")).flatMap(m => m.start(1) + 1 until m.end(1)).toSeq
+      },
+      "in-utf8" -> (b => b.indices.filter(i => (b(i) & 0xc0) == 0x80)),
+      "root-close" -> { b =>
+        val close = offsets(b, "</osm>", 0, atEnd = false).headOption.getOrElse(b.length)
+        (close - 1 to close + 6).filter(_ < b.length)
+      },
+      "element-end" -> (b => offsets(b, "<(node|way|relation) [^>]*/>|</(node|way|relation)>", 0, atEnd = true)),
+      "one-byte" -> (_ => Seq(1)))
+    val endings = Seq[(String, String => String)](
+      "whole" -> identity, "no-newline" -> (_.stripSuffix("\n")),
+      "no-root-close" -> (_.stripSuffix("\n").stripSuffix("</osm>")))
+    for (((layout, edges), l) <- layouts.zipWithIndex; ((ending, cut), e) <- endings.zipWithIndex) {
+      val seed = 1000L + 10 * l + e
+      // one-byte ranges mean a task per byte: a small document keeps it quick
+      val doc = if (layout == "one-byte") osmDoc.suchThat(x => x.length < 700 && x.contains(" id=")) else osmDoc
+      val (xml, pick, cleanStreets, includeRelations) = (for {
+        xml <- doc; pick <- Gen.choose(0, 1000)
+        cleanStreets <- Gen.oneOf(true, false); includeRelations <- Gen.oneOf(true, false)
+      } yield (xml, pick, cleanStreets, includeRelations))
+        .retryUntil(t => edges(cut(t._1).getBytes(UTF_8)).exists(_ > 0))(Gen.Parameters.default, Seed(seed)).get
+      val onDisk = cut(xml)
+      val candidates = edges(onDisk.getBytes(UTF_8)).filter(_ > 0)
+      check(s"$layout-$ending", onDisk, xml, candidates(pick % candidates.size).toLong,
+        cleanStreets, includeRelations)
+    }
+  }
+
+  test("range streams over trickling reads concatenate to the whole-document parse") {
+    // a file system may return any count of bytes per read: every
+    // buffer refill, lookahead and range edge lands somewhere new
+    val params = for {
+      xml <- osmDoc; splitBytes <- Gen.choose(1, 700); chunk <- Gen.choose(1, 13)
+      cleanStreets <- Gen.oneOf(true, false); includeRelations <- Gen.oneOf(true, false)
+    } yield (xml, splitBytes, chunk, cleanStreets, includeRelations)
+    for (i <- 0 until 40) {
+      val (xml, splitBytes, chunk, cleanStreets, includeRelations) =
+        params(Gen.Parameters.default, Seed(2000L + i)).get
+      val bytes = xml.getBytes(UTF_8)
+      val got = (0 until bytes.length by splitBytes).flatMap { start =>
+        val trickle = new java.io.ByteArrayInputStream(bytes, start, bytes.length - start) {
+          override def read(b: Array[Byte], off: Int, len: Int): Int =
+            super.read(b, off, math.min(len, chunk))
+        }
+        val end = math.min(start + splitBytes, bytes.length).toLong
+        decoded(new OsmSource.RangeStream(trickle, start.toLong, end), cleanStreets, includeRelations)
+      }
+      withClue(s"seed ${2000 + i}, splitBytes $splitBytes, chunk $chunk: ") {
+        got shouldBe parseElements(xml, cleanStreets, includeRelations)
       }
     }
   }
 
   test("DSv2 reader rows equal the OsmElement encoder's, in full and on pruned columns") {
-    import org.apache.spark.sql.Encoders
-    import org.apache.spark.sql.catalyst.encoders.{AgnosticEncoder, ExpressionEncoder}
     import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, UnsafeProjection}
     import org.apache.spark.sql.types.StructType
-    val full = graft.sources.OsmXmlSource.schema
-    val serialize = ExpressionEncoder(Encoders.product[OsmSource.OsmElement]
-      .asInstanceOf[AgnosticEncoder[OsmSource.OsmElement]]).createSerializer()
+    val full = OsmXmlSource.schema
+    val serialize = encoder.createSerializer()
     val params = for {
       xml <- osmDoc; splitBytes <- Gen.choose(64, 4096)
       cleanStreets <- Gen.oneOf(true, false); includeRelations <- Gen.oneOf(true, false)
@@ -251,10 +338,11 @@ class OsmSourceSpec extends SparkSpec {
         .option("includeRelations", includeRelations.toString)
         .load(p.toString).select(cols.map(col): _*)
       val got = df.queryExecution.toRdd.map(_.copy()).collect().toSeq
-      // the encoder's row, cut to the same columns, as the same bytes
+      // the whole document's rows, decoded to OsmElements and encoded
+      // again, cut to the same columns, as the same bytes
       val idx = cols.map(full.fieldIndex)
       val toUnsafe = UnsafeProjection.create(StructType(cols.map(full(_))))
-      val want = OsmSource.parseElements(xml, cleanStreets, includeRelations).map { e =>
+      val want = parseElements(xml, cleanStreets, includeRelations).map { e =>
         val r = serialize(e)
         toUnsafe(new GenericInternalRow(idx.map(j => r.get(j, full(j).dataType)).toArray[Any])).copy()
       }.toSeq
@@ -273,7 +361,7 @@ class OsmSourceSpec extends SparkSpec {
       .option("cleanStreets", "false")
       .option("splitBytes", "1024")
       .load(p.toString)
-    val whole = OsmSource.parseElements(OsmFixture.xml, cleanStreets = false,
+    val whole = parseElements(OsmFixture.xml, cleanStreets = false,
       includeRelations = true).toSeq.toDS().toDF()
     dsv2.count() shouldBe 22 // 20 nodes + way + relation
     // identical rows (stable projection; timestamps included)
@@ -312,6 +400,16 @@ class OsmSourceSpec extends SparkSpec {
       case (k, Some(v)) => spark.conf.set(k, v)
       case (k, None) => spark.conf.unset(k)
     }
+  }
+
+  test("DSv2 source: splitBytes has no upper bound; it must be positive") {
+    val p = OsmFixture.write("example.osm", OsmFixture.xml).toString
+    def read(splitBytes: Long) = spark.read.format("graft.sources.OsmXmlSource")
+      .option("splitBytes", splitBytes.toString).load(p)
+    val huge = read(1L << 32)
+    huge.rdd.getNumPartitions shouldBe 1
+    huge.count() shouldBe 21
+    intercept[IllegalArgumentException](read(0).count())
   }
 
   test("split reader and DSv2 source handle paths containing spaces") {

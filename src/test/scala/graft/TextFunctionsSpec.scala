@@ -48,6 +48,18 @@ class TextFunctionsSpec extends SparkSpec {
     m("Mozart Street") shouldBe "Mozart Street"
   }
 
+  test("normalizeStreet strips whitespace of every kind, as updateName and name.split() do") {
+    val padded = Seq("Main St\t", "\nOak Rd.", " \tElm Ave\r\n", "Pine Blvd\u000b")
+    val m = normalize(padded: _*)
+    m("Main St\t") shouldBe "Main Street"
+    m("\nOak Rd.") shouldBe "Oak Road"
+    m(" \tElm Ave\r\n") shouldBe "Elm Avenue"
+    m("Pine Blvd\u000b") shouldBe "Pine Boulevard"
+    padded.foreach(n => m(n) shouldBe T.updateName(n))
+    // an unmapped padded name still comes back exactly as it was
+    normalize("Mozart Street\t")("Mozart Street\t") shouldBe "Mozart Street\t"
+  }
+
   test("normalizeStreet property: only the last token ever changes") {
     import spark.implicits._
     import org.scalacheck.Gen

@@ -17,8 +17,10 @@ won, the parent's IQR as a share of its median, and the verdict against the
 metric's bound: "worse" when the change's median is worse than the parent's
 by more than the bound, "better" when it is better by more than the parent's
 IQR, otherwise "same" ("unresolved" when that IQR is itself wider than the
-bound). The record (every run's result plus the summary) is written as JSON.
-Standard library only.
+bound). It also counts the lines of the .scala files under src/main and
+src/test on both sides and prints the net change of each, the figure every
+change reports beside its timing. The record (every run's result, the summary
+and the line counts) is written as JSON. Standard library only.
 """
 import argparse
 import io
@@ -56,6 +58,23 @@ def export(rev, dest):
     with tarfile.open(fileobj=io.BytesIO(git("archive", "--format=tar", rev))) as t:
         t.extractall(dest)
     return git("rev-parse", rev).decode().strip()
+
+
+LOC_PARTS = ("src/main", "src/test")
+
+
+def scala_lines(side_dir):
+    """Lines of the .scala files under each of LOC_PARTS of one export."""
+    counts = {}
+    for part in LOC_PARTS:
+        n = 0
+        for dirpath, _, files in os.walk(os.path.join(side_dir, part)):
+            for name in files:
+                if name.endswith(".scala"):
+                    with open(os.path.join(dirpath, name), "rb") as f:
+                        n += sum(1 for _ in f)
+        counts[part] = n
+    return counts
 
 
 def run(side_dir, workload, seed, seconds):
@@ -136,6 +155,12 @@ def main():
     sides = {"parent": os.path.join(a.dir, "parent"), "change": os.path.join(a.dir, "change")}
     revs = {"parent": export(a.parent, sides["parent"]), "change": export(a.change, sides["change"])}
     log(f"parent {revs['parent']}, change {revs['change']} under {a.dir}")
+    lines = {side: scala_lines(d) for side, d in sides.items()}
+    loc = {"parent": lines["parent"], "change": lines["change"],
+           "net": {part: lines["change"][part] - lines["parent"][part] for part in LOC_PARTS}}
+    loc_line = ", ".join(f"{part} {loc['net'][part]:+d} ({lines['parent'][part]} -> {lines['change'][part]})"
+                         for part in LOC_PARTS)
+    log(f"net .scala lines: {loc_line}")
     with open(os.path.join(sides["change"], "BENCHMARK.json")) as f:
         bench = json.load(f)
     workloads = a.workloads.split(",") if a.workloads else [w["name"] for w in bench["workloads"]]
@@ -160,7 +185,7 @@ def main():
                                            for p in pairs[w] if p[side]["result"])}
                   for side in sides} for w in workloads}
     record = {"parent": revs["parent"], "change": revs["change"], "pairs": a.pairs, "seed0": a.seed0,
-              "seconds": a.seconds, "summary": summary, "health": health, "runs": pairs}
+              "seconds": a.seconds, "loc": loc, "summary": summary, "health": health, "runs": pairs}
     with open(a.out, "w") as f:
         json.dump(record, f, indent=1)
 
@@ -175,6 +200,7 @@ def main():
             print(f"  {name:22} {s['parent_median']:12.4g} {s['change_median']:12.4g} {s['ratio']:7.3f} "
                   f"{s['change_wins']:>3}/{s['pairs']:<2} {s['parent_iqr_over_median']:8.3f} "
                   f"{s['bound']:6.2f}  {s['verdict']}")
+    print(f"net .scala lines: {loc_line}")
     print(f"record: {a.out}")
 
 
